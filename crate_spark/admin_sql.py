@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame
 
 from crate_spark.dml import CrateTable
 from crate_spark.roles import PERMISSIONS, SUPERUSER, RoleStore
+from crate_spark.session import local_frame
 from crate_spark.snapshots import SnapshotError, SnapshotStore
 
 _PRIV_WORD = "|".join(PERMISSIONS)
@@ -47,7 +48,7 @@ def route_admin(session, stmt: str) -> DataFrame | None:
     snaps: SnapshotStore = session.snapshots
 
     def ok(n: int = 1) -> DataFrame:
-        return spark.createDataFrame([(n,)], "rowcount bigint")
+        return local_frame(spark, [(n,)], "rowcount bigint")
 
     # -- session authorization ------------------------------------------
     m = re.match(
@@ -58,10 +59,10 @@ def route_admin(session, stmt: str) -> DataFrame | None:
     if m:
         session.current_user = (m.group(1) or SUPERUSER).lower()
         roles._get(session.current_user)  # must exist
-        return spark.createDataFrame([("OK",)], "status string")
+        return local_frame(spark, [("OK",)], "status string")
     if re.match(r"RESET\s+SESSION\s+AUTHORIZATION\s*$", stmt, re.IGNORECASE):
         session.current_user = SUPERUSER
-        return spark.createDataFrame([("OK",)], "status string")
+        return local_frame(spark, [("OK",)], "status string")
 
     # -- users / roles ---------------------------------------------------
     m = re.match(

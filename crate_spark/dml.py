@@ -36,7 +36,10 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
+
+from crate_spark.session import ddl_schema, local_frame
 
 META_FILE = "_crate_meta.json"
 
@@ -165,7 +168,7 @@ class CrateTable:
 
     def read(self) -> DataFrame:
         if not self._has_data():
-            return self.spark.createDataFrame([], self.schema_ddl)
+            return local_frame(self.spark, [], self.schema_ddl)
         return self.spark.read.schema(self.schema_ddl).parquet(self.path)
 
     # -- write plumbing --------------------------------------------------
@@ -223,7 +226,7 @@ class CrateTable:
                     df = df.withColumn(
                         col, F.expr(f"rpad({col}, {n}, ' ')")
                     )
-        names = [f.name for f in self.spark.createDataFrame([], self.schema_ddl).schema.fields]
+        names = [f.name for f in ddl_schema(self.schema_ddl).fields]
         return df.select(*names)
 
     def _check_viol_col(self):
@@ -334,7 +337,7 @@ class CrateTable:
         schema merge); declared columns missing from the batch are
         filled with NULL.
         """
-        declared = self.spark.createDataFrame([], self.schema_ddl).schema
+        declared = ddl_schema(self.schema_ddl)
         declared_types = {f.name: f.dataType for f in declared.fields}
         # a dynamic batch may ADD columns but never change a type
         # (DynamicIndexer raises a mapper conflict in the reference)
@@ -352,7 +355,7 @@ class CrateTable:
                 + [f"{f.name} {f.dataType.simpleString()}" for f in new_fields]
             )
             self._save_meta()
-        full = self.spark.createDataFrame([], self.schema_ddl).schema
+        full = ddl_schema(self.schema_ddl)
         for f in full.fields:
             if f.name not in df.columns:
                 df = df.withColumn(f.name, F.lit(None).cast(f.dataType))
@@ -403,7 +406,7 @@ class CrateTable:
         if returning is not None:
             out = (
                 self.spark.read.schema(
-                    self.spark.createDataFrame([], self.schema_ddl).schema
+                    ddl_schema(self.schema_ddl)
                 )
                 .option("basePath", self.path)
                 .parquet(*moved)
@@ -417,17 +420,10 @@ class CrateTable:
         """INSERT INTO ... VALUES — rows carry the non-generated columns
         in schema order."""
         gen = set(self.generated)
-        names = [
-            f.name
-            for f in self.spark.createDataFrame([], self.schema_ddl).schema.fields
-            if f.name not in gen
-        ]
-        base = self.spark.createDataFrame(rows, schema=", ".join(
-            f"{f.name} {f.dataType.simpleString()}"
-            for f in self.spark.createDataFrame([], self.schema_ddl).schema.fields
-            if f.name not in gen
-        ))
-        return self.insert(base.toDF(*names), returning=returning)
+        schema = StructType(
+            [f for f in ddl_schema(self.schema_ddl).fields if f.name not in gen]
+        )
+        return self.insert(local_frame(self.spark, rows, schema), returning=returning)
 
     def upsert(self, df: DataFrame, *, do_nothing: bool = False,
                set_exprs: dict[str, str] | None = None) -> dict:
@@ -634,7 +630,7 @@ class CrateTable:
                     os.unlink(spool)
                 except OSError:
                     pass
-        target_schema = self.spark.createDataFrame([], self.schema_ddl).schema
+        target_schema = ddl_schema(self.schema_ddl)
         if format == "csv":
             raw = (
                 self.spark.read.option("header", header)

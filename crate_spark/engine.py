@@ -28,7 +28,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from crate_spark.dialect import _LIT_RE, rewrite, rewrite_sys_columns
-from crate_spark.session import TABLES, apply_runtime_confs, load_tables
+from crate_spark.session import (
+    TABLES, apply_runtime_confs, ddl_schema, load_tables, local_frame,
+)
 
 
 def _sql_literal(v) -> str:
@@ -280,13 +282,12 @@ class CrateSession:
         #: sys.node_checks ids acknowledged via UPDATE (transient,
         #: like the reference's — lost on restart)
         self._node_check_ack: set[int] = set()
-        #: system-view registration is LAZY (r11 optimization round):
-        #: rebuilding the ~60 catalog temp views costs ~1 s of
-        #: createDataFrame round-trips, and the old code paid it on
-        #: EVERY DDL/DML statement and session construction. Mutations
-        #: now bump a generation counter; the views rebuild only when
-        #: a statement actually reads them (_ensure_system_views) and
-        #: the registered generation is stale.
+        #: system-view registration is LAZY: mutations bump a
+        #: generation counter, and the ~65 catalog temp views rebuild
+        #: only when a statement reads them (_ensure_system_views) and
+        #: the registered generation is stale. Each view is a
+        #: local_frame (no Spark job), yet a rebuild still costs ~20 ms
+        #: of py4j round trips per view: ~1.4 s at local[4] on 4 vCPUs.
         self._sysviews_gen = 1
         #: monotonic identity token (ADVICE r11: id(self) can be
         #: reused by CPython after GC, letting a new CrateSession
@@ -517,13 +518,13 @@ class CrateSession:
                 (t, sch, "BASE TABLE", None, None, None, None, None, None)
                 for t in names
             ]
-        spark.createDataFrame(
-            rows or [("", "", "", 0, "0", "", None, None, None)],
+        local_frame(
+            spark, rows,
             "table_name string, table_schema string, table_type string, "
             "number_of_shards int, number_of_replicas string, "
             "clustered_by string, partitioned_by array<string>, "
             "settings string, version struct<created:string,upgraded:string>",
-        ).filter("table_name <> ''").withColumn(
+        ).withColumn(
             # blob-storage custom location (blob tables only; always
             # NULL here — blobs live in the store's own directory)
             "blobs_path", F.lit(None).cast("string")
@@ -540,8 +541,8 @@ class CrateSession:
         routine_rows += [
             (f"{sch}.{n}", "FUNCTION") for (sch, n) in getattr(self, "_udfs", ())
         ]
-        spark.createDataFrame(
-            routine_rows, "routine_name string, routine_type string"
+        local_frame(
+            spark, routine_rows, "routine_name string, routine_type string"
         ).createOrReplaceTempView("information_schema_routines")
 
         # information_schema.sql_features: the SQL-standard feature
@@ -563,8 +564,8 @@ class CrateSession:
                     feat_rows.append(
                         tuple(parts[:5]) + tuple(p or None for p in parts[5:])
                     )
-            spark.createDataFrame(
-                feat_rows,
+            local_frame(
+                spark, feat_rows,
                 "feature_id string, feature_name string, sub_feature_id string, "
                 "sub_feature_name string, is_supported string, "
                 "is_verified_by string, comments string",
@@ -572,8 +573,8 @@ class CrateSession:
 
         # information_schema.character_sets: single UTF8 row
         # (information-schema.rst:938-944)
-        spark.createDataFrame(
-            [("UTF8", "UCS", "UTF8", None, None, None)],
+        local_frame(
+            spark, [("UTF8", "UCS", "UTF8", None, None, None)],
             "character_set_name string, character_repertoire string, "
             "form_of_use string, character_set_catalog string, "
             "character_set_schema string, default_collate_name string",
@@ -581,8 +582,8 @@ class CrateSession:
 
         # information_schema.collations: single C.utf8 row
         # (information-schema.rst:988-994)
-        spark.createDataFrame(
-            [("crate", "pg_catalog", "C.utf8", "NO")],
+        local_frame(
+            spark, [("crate", "pg_catalog", "C.utf8", "NO")],
             "collation_catalog string, collation_schema string, "
             "collation_name string, pad_attribute string",
         ).createOrReplaceTempView("information_schema_collations")
@@ -590,18 +591,17 @@ class CrateSession:
         # information_schema.views (information-schema.rst:260-300):
         # definition is the stored SQL text (the reference re-prints
         # its AST; we keep the user's text — declared divergence)
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [
                 ("crate", table_schema.get(n, "doc"), n, d, "NONE", False,
                  self.current_user)
                 for n, d in sorted(views.items())
-            ] or [("", "", "", "", "", False, "")],
+            ],
             "table_catalog string, table_schema string, table_name string, "
             "view_definition string, check_option string, "
             "is_updatable boolean, owner string",
-        ).filter("table_name <> ''").createOrReplaceTempView(
-            "information_schema_views"
-        )
+        ).createOrReplaceTempView("information_schema_views")
 
         # information_schema.schemata (schemata.rst /
         # InformationSchemataTableInfo): built-ins + implicit schemas
@@ -611,8 +611,8 @@ class CrateSession:
             | set(table_schema.values())
             | getattr(self, "_schemas", set())
         )
-        spark.createDataFrame(
-            [("crate", s) for s in schema_names],
+        local_frame(
+            spark, [("crate", s) for s in schema_names],
             "catalog_name string, schema_name string",
         ).createOrReplaceTempView("information_schema_schemata")
 
@@ -676,13 +676,11 @@ class CrateSession:
                     (name, table_schema.get(name, "doc"), entry,
                      _json.dumps(vals), _shards_of(name), 0)
                 )
-        spark.createDataFrame(
-            part_rows or [("", "", "", "", 0, 0)],
+        local_frame(
+            spark, part_rows,
             "table_name string, table_schema string, partition_ident string, "
             "values string, number_of_shards int, number_of_replicas int",
-        ).filter("table_name <> ''").createOrReplaceTempView(
-            "information_schema_table_partitions"
-        )
+        ).createOrReplaceTempView("information_schema_table_partitions")
 
         # information_schema.columns with the reference's shape
         # (information-schema.rst:363-381): crate data_type names,
@@ -741,11 +739,11 @@ class CrateSession:
             ("cluster", "sys", cname, pos, dtype, True)
             for pos, (cname, dtype) in enumerate(sys_cluster_cols, start=1)
         ]
-        spark.createDataFrame(
-            col_rows or [("", "", "", 0, "", True)],
+        local_frame(
+            spark, col_rows,
             "table_name string, table_schema string, column_name string, "
             "ordinal_position int, data_type string, is_nullable boolean",
-        ).filter("table_name <> ''").createOrReplaceTempView("information_schema_columns")
+        ).createOrReplaceTempView("information_schema_columns")
 
         # information_schema.table_constraints / key_column_usage
         # (reference InformationSchemaTableDefinitions): PK constraints
@@ -768,20 +766,16 @@ class CrateSession:
                 )
             for i, _chk in enumerate(ct.checks):
                 tc_rows.append((f"{name}_check_{i}", name, sch, "CHECK"))
-        spark.createDataFrame(
-            tc_rows or [("", "", "", "")],
+        local_frame(
+            spark, tc_rows,
             "constraint_name string, table_name string, table_schema string, "
             "constraint_type string",
-        ).filter("constraint_name <> ''").createOrReplaceTempView(
-            "information_schema_table_constraints"
-        )
-        spark.createDataFrame(
-            kcu_rows or [("", "", "", "", 0)],
+        ).createOrReplaceTempView("information_schema_table_constraints")
+        local_frame(
+            spark, kcu_rows,
             "constraint_name string, table_name string, table_schema string, "
             "column_name string, ordinal_position int",
-        ).filter("constraint_name <> ''").createOrReplaceTempView(
-            "information_schema_key_column_usage"
-        )
+        ).createOrReplaceTempView("information_schema_key_column_usage")
 
         # sys.cluster with the live settings object: SET GLOBAL
         # overrides on top of the full documented defaults tree
@@ -801,7 +795,8 @@ class CrateSession:
             for p in parts[:-1]:
                 cur = cur.setdefault(p, {})
             cur[parts[-1]] = v
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(
                 "cluster-1", getattr(self, "cluster_name", "crate-spark"),
                 "n1", None, spark.version,
@@ -811,10 +806,10 @@ class CrateSession:
             "id string, name string, master_node string, license string, "
             "version string, parallelism int, settings string",
         ).createOrReplaceTempView("sys_cluster")
-        spark.createDataFrame(
-            [(n, "doc") for n in sorted(self.tables)] or [("", "")],
+        local_frame(
+            spark, [(n, "doc") for n in sorted(self.tables)],
             "table_name string, schema_name string",
-        ).filter("table_name <> ''").createOrReplaceTempView("sys_tables")
+        ).createOrReplaceTempView("sys_tables")
 
         # sys.nodes / sys.shards / sys.health / sys.jobs — single-node
         # analogs (reference SysNodesTableInfo, SysShardsTableInfo,
@@ -824,7 +819,8 @@ class CrateSession:
         # execute() is synchronous).
         import socket
 
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [("n1", socket.gethostname(), socket.gethostname(),
               spark.version, spark.sparkContext.defaultParallelism,
               {"http": 4200, "psql": 5432, "transport": 4300})],
@@ -882,31 +878,31 @@ class CrateSession:
                     )
             else:
                 shard_rows.append((n, "doc", 0, True, "STARTED", None, None, None))
-        spark.createDataFrame(
+        local_frame(
+            spark,
             # full SysShardsTableInfo routing columns: never
             # relocating, routing == lifecycle state, no orphaned
             # partitions on the parquet store
-            [r + ("", None, r[4], False) for r in shard_rows]
-            or [("", "", 0, True, "", 0, 0, 0, "", None, "", False)],
+            [r + ("", None, r[4], False) for r in shard_rows],
             "table_name string, schema_name string, id int, "
             "primary boolean, state string, size bigint, num_segments int, "
             "num_docs bigint, partition_ident string, "
             "relocating_node string, routing_state string, "
             "orphan_partition boolean",
-        ).filter("table_name <> ''").createOrReplaceTempView("sys_shards")
+        ).createOrReplaceTempView("sys_shards")
         # sys.health / sys.cluster_health (SysHealth; columns in
         # alphabetical order — crate prints SELECT * alphabetically):
         # every shard is a started primary here, so always GREEN
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [("GREEN", 0, None, 1, n, table_schema.get(n, "doc"), 0)
-             for n in sorted(self.tables)]
-            or [("", 0, None, 0, "", "", 0)],
+             for n in sorted(self.tables)],
             "health string, missing_shards int, partition_ident string, "
             "severity int, table_name string, table_schema string, "
             "underreplicated_shards int",
-        ).filter("table_name <> ''").createOrReplaceTempView("sys_health")
-        spark.createDataFrame(
-            [("", "GREEN", 0, 0, 1, 0)],
+        ).createOrReplaceTempView("sys_health")
+        local_frame(
+            spark, [("", "GREEN", 0, 0, 1, 0)],
             "description string, health string, missing_shards int, "
             "pending_tasks int, severity int, underreplicated_shards int",
         ).createOrReplaceTempView("sys_cluster_health")
@@ -915,14 +911,13 @@ class CrateSession:
         # select themselves out of sys.jobs
         node_obj = ("n1", "crate")
         jobs_now = list(getattr(self, "_jobs_stack", []))
-        spark.createDataFrame(
-            [(j[0], j[1], j[2], j[3], node_obj, 1) for j in jobs_now]
-            or [("", "", "", None, node_obj, 0)],
+        local_frame(
+            spark, [(j[0], j[1], j[2], j[3], node_obj, 1) for j in jobs_now],
             "id string, stmt string, username string, started timestamp, "
             "node struct<id:string,name:string>, session_id int",
-        ).filter("id <> ''").createOrReplaceTempView("sys_jobs")
-        spark.createDataFrame(
-            list(self._jobs_log),
+        ).createOrReplaceTempView("sys_jobs")
+        local_frame(
+            spark, list(self._jobs_log),
             "id string, stmt string, username string, started timestamp, "
             "ended timestamp, error string",
         ).createOrReplaceTempView("sys_jobs_log")
@@ -934,15 +929,16 @@ class CrateSession:
             "id string, job_id string, name string, started timestamp, "
             "ended timestamp, used_bytes bigint, error string"
         )
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(f"op-{j[0]}", j[0], "collect", node_obj, j[3], 0)
-             for j in jobs_now]
-            or [("", "", "", node_obj, None, 0)],
+             for j in jobs_now],
             "id string, job_id string, name string, "
             "node struct<id:string,name:string>, started timestamp, "
             "used_bytes bigint",
-        ).filter("id <> ''").createOrReplaceTempView("sys_operations")
-        spark.createDataFrame(
+        ).createOrReplaceTempView("sys_operations")
+        local_frame(
+            spark,
             [(f"op-{j[0]}", j[0], "collect", j[3], j[4], None, j[5])
              for j in self._jobs_log],
             op_schema,
@@ -969,19 +965,20 @@ class CrateSession:
                 float(_stats.pstdev(durs)) if len(durs) > 1 else 0.0,
                 int(max(durs)), int(min(durs)), "n1", kind,
             ))
-        spark.createDataFrame(
-            metric_rows or [(0, 0, 0, 0.0, 0.0, 0, 0, "", "")],
+        local_frame(
+            spark, metric_rows,
             "total_count bigint, sum_of_durations bigint, failed_count bigint, "
             "mean double, stdev double, max bigint, min bigint, "
             "node_id string, classification string",
-        ).filter("node_id <> ''").createOrReplaceTempView("sys_metrics")
+        ).createOrReplaceTempView("sys_metrics")
 
         # sys.checks / sys.node_checks (SysChecksTableInfo /
         # SysNodeChecksTableInfo; severity 1=LOW..3=HIGH): the
         # reference's registered checks with their documented
         # descriptions (system-information.rst example output), all
         # passing; acknowledged is UPDATE-able and transient
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(2, 2,
               "The total number of partitions of one or more partitioned "
               "tables is approaching the soft limit. Consider reducing "
@@ -993,7 +990,8 @@ class CrateSession:
             "id int, severity int, description string, passed boolean",
         ).createOrReplaceTempView("sys_checks")
         ack = getattr(self, "_node_check_ack", set())
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(cid, "n1", sev, desc, True, cid in ack)
              for cid, sev, desc in _NODE_CHECKS],
             "id int, node_id string, severity int, description string, "
@@ -1002,13 +1000,14 @@ class CrateSession:
 
         # sys.allocations (SysAllocationsTableInfo): one row per shard,
         # mirroring sys.shards routing on the single node
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(r[1], r[0], None, r[2], "n1", True, "STARTED", None)
-             for r in shard_rows if r[0]] or [("", "", None, 0, "", True, "", None)],
+             for r in shard_rows if r[0]],
             "table_schema string, table_name string, partition_ident string, "
             "shard_id int, node_id string, primary boolean, "
             "current_state string, explanation string",
-        ).filter("table_name <> ''").createOrReplaceTempView("sys_allocations")
+        ).createOrReplaceTempView("sys_allocations")
 
         # sys.segments (SysSegmentsTableInfo): the storage-segment
         # analog is one row per parquet file, with REAL per-file row
@@ -1035,19 +1034,20 @@ class CrateSession:
                         ("doc", n, None, 0, f, num_docs, 0,
                          _os.path.getsize(p), True, True, True)
                     )
-        spark.createDataFrame(
-            seg_rows or [("", "", None, 0, "", 0, 0, 0, True, True, True)],
+        local_frame(
+            spark, seg_rows,
             "table_schema string, table_name string, partition_ident string, "
             "shard_id int, segment_name string, num_docs bigint, "
             "deleted_docs int, size bigint, committed boolean, "
             "primary boolean, search boolean",
-        ).filter("table_name <> ''").createOrReplaceTempView("sys_segments")
+        ).createOrReplaceTempView("sys_segments")
 
         # sys.sessions (SysSessionsTableInfo): this session
         from datetime import datetime as _dt
 
         last = self._jobs_log[-1] if self._jobs_log else None
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [("s1", getattr(self, "auth_user", self.current_user),
               self.current_user, "n1", "local", _dt.now(), "http", False,
               last[1] if last else None, last[0] if last else None)],
@@ -1059,14 +1059,14 @@ class CrateSession:
 
         # sys.snapshot_restore (SysSnapshotRestoreTableInfo): populated
         # by RESTORE SNAPSHOT; empty otherwise
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(str(i), s[0], s[1], "doc", s[2], None, 0, "SUCCESS")
-             for i, s in enumerate(getattr(self, "_restores", []))]
-            or [("", "", "", "", "", None, 0, "")],
+             for i, s in enumerate(getattr(self, "_restores", []))],
             "id string, repository string, name string, table_schema string, "
             "table_name string, partition_ident string, shard_id int, "
             "state string",
-        ).filter("repository <> ''").createOrReplaceTempView("sys_snapshot_restore")
+        ).createOrReplaceTempView("sys_snapshot_restore")
 
         # sys.summits (SysSummitsTableInfo: mountain/height/prominence/
         # coordinates geo_point/range/classification/region/country/
@@ -1101,8 +1101,8 @@ class CrateSession:
                         p[7] or None,
                         int(p[8]) if len(p) > 8 and p[8] else None,
                     ))
-            spark.createDataFrame(
-                srows,
+            local_frame(
+                spark, srows,
                 "mountain string, height int, prominence int, "
                 "coordinates array<double>, range string, "
                 "classification string, region string, country string, "
@@ -1112,11 +1112,12 @@ class CrateSession:
         # pg_catalog minimum for PG-compat tooling (reference
         # metadata/pgcatalog/PgCatalogTableDefinitions.java): pg_tables,
         # pg_namespace, pg_type — queryable as pg_catalog.X via the shim.
-        spark.createDataFrame(
-            [("doc", n, "crate") for n in sorted(self.tables)] or [("", "", "")],
+        local_frame(
+            spark, [("doc", n, "crate") for n in sorted(self.tables)],
             "schemaname string, tablename string, tableowner string",
-        ).filter("tablename <> ''").createOrReplaceTempView("pg_catalog_pg_tables")
-        spark.createDataFrame(
+        ).createOrReplaceTempView("pg_catalog_pg_tables")
+        local_frame(
+            spark,
             [(11, "doc"), (12, "information_schema"), (13, "sys"), (14, "pg_catalog")],
             "oid int, nspname string",
         ).createOrReplaceTempView("pg_catalog_pg_namespace")
@@ -1128,10 +1129,10 @@ class CrateSession:
                 con_rows.append((f"{name}_pkey", "p", name))
             for i, _chk in enumerate(ct.checks):
                 con_rows.append((f"{name}_check_{i}", "c", name))
-        spark.createDataFrame(
-            con_rows or [("", "", "")],
+        local_frame(
+            spark, con_rows,
             "conname string, contype string, relname string",
-        ).filter("conname <> ''").createOrReplaceTempView("pg_catalog_pg_constraint")
+        ).createOrReplaceTempView("pg_catalog_pg_constraint")
 
         # pg_type: the reference's full 54-row catalog inventory
         # (PGTypes.java; listed verbatim in interfaces/postgres.rst) —
@@ -1139,7 +1140,8 @@ class CrateSession:
         # (oid of the array type), typelem (element oid for arrays),
         # typlen (-1 varlena, -2 cstring), typtype (b base/p pseudo),
         # typcategory (N numeric, S string, A array, D datetime, ...)
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [
                 (16, "bool", 1000, 0, 1, "b", "N"),
                 (18, "char", 1002, 0, 1, "b", "S"),
@@ -1208,21 +1210,22 @@ class CrateSession:
             (16384 + i, n, 11, "r", len(self.tables[n].columns))
             for i, n in enumerate(sorted(self.tables))
         ]
-        spark.createDataFrame(
-            cls_rows or [(0, "", 0, "", 0)],
+        local_frame(
+            spark, cls_rows,
             "oid int, relname string, relnamespace int, relkind string, relnatts int",
-        ).filter("relname <> ''").createOrReplaceTempView("pg_catalog_pg_class")
+        ).createOrReplaceTempView("pg_catalog_pg_class")
         att_rows = []
         for i, n in enumerate(sorted(self.tables)):
             for pos, f in enumerate(self.tables[n].schema.fields, start=1):
                 att_rows.append(
                     (16384 + i, f.name, _pg_type_oid(f.dataType), pos, not f.nullable)
                 )
-        spark.createDataFrame(
-            att_rows or [(0, "", 0, 0, False)],
+        local_frame(
+            spark, att_rows,
             "attrelid int, attname string, atttypid int, attnum int, attnotnull boolean",
-        ).filter("attname <> ''").createOrReplaceTempView("pg_catalog_pg_attribute")
-        spark.createDataFrame(
+        ).createOrReplaceTempView("pg_catalog_pg_attribute")
+        local_frame(
+            spark,
             [
                 (2100 + i, name, 11)
                 for i, name in enumerate(
@@ -1240,12 +1243,12 @@ class CrateSession:
         # reference itself serves EMPTY (pg_enum, pg_locks, pg_depend,
         # pg_matviews, pg_event_trigger, pg_range, pg_shdescription,
         # pg_am, pg_description) so tooling that probes them succeeds.
-        spark.createDataFrame(
-            [(0, "crate", 6, True)],
+        local_frame(
+            spark, [(0, "crate", 6, True)],
             "oid int, datname string, encoding int, datallowconn boolean",
         ).createOrReplaceTempView("pg_catalog_pg_database")
-        spark.createDataFrame(
-            [(0, "pg_default")], "oid int, spcname string",
+        local_frame(
+            spark, [(0, "pg_default")], "oid int, spcname string",
         ).createOrReplaceTempView("pg_catalog_pg_tablespace")
         setting_rows = [
             ("search_path", "doc"), ("datestyle", "ISO"), ("timezone", "UTC"),
@@ -1253,39 +1256,40 @@ class CrateSession:
             ("max_index_keys", "32"), ("max_identifier_length", "255"),
             ("application_name", ""), ("enable_hashjoin", "on"),
         ]
-        spark.createDataFrame(
-            setting_rows, "name string, setting string",
+        local_frame(
+            spark, setting_rows, "name string, setting string",
         ).createOrReplaceTempView("pg_catalog_pg_settings")
         role_rows = [
             (r[0], bool(r[1]), True) for r in self.roles.sys_users_rows()
         ] or [("crate", True, True)]
-        spark.createDataFrame(
-            role_rows, "rolname string, rolsuper boolean, rolcanlogin boolean",
+        local_frame(
+            spark, role_rows, "rolname string, rolsuper boolean, rolcanlogin boolean",
         ).createOrReplaceTempView("pg_catalog_pg_roles")
-        spark.createDataFrame(
-            [(r[0],) for r in role_rows], "usename string",
+        local_frame(
+            spark, [(r[0],) for r in role_rows], "usename string",
         ).createOrReplaceTempView("pg_catalog_pg_user")
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(name, "doc", cur.get("stmt", ""))
-             for name, cur in self._cursors.items()] or [("", "", "")],
+             for name, cur in self._cursors.items()],
             "name string, schemaname string, statement string",
-        ).filter("name <> ''").createOrReplaceTempView("pg_catalog_pg_cursors")
+        ).createOrReplaceTempView("pg_catalog_pg_cursors")
         view_rows = [
             (vn, "doc", "crate") for vn in sorted(getattr(self, "_views", {}))
         ]
-        spark.createDataFrame(
-            view_rows or [("", "", "")],
+        local_frame(
+            spark, view_rows,
             "viewname string, schemaname string, viewowner string",
-        ).filter("viewname <> ''").createOrReplaceTempView("pg_catalog_pg_views")
+        ).createOrReplaceTempView("pg_catalog_pg_views")
         idx_rows = [
             (f"{name}_pkey", name, "doc")
             for name, ct in sorted(getattr(self._dml, "crate_tables", {}).items())
             if ct.primary_key
         ]
-        spark.createDataFrame(
-            idx_rows or [("", "", "")],
+        local_frame(
+            spark, idx_rows,
             "indexname string, tablename string, schemaname string",
-        ).filter("indexname <> ''").createOrReplaceTempView("pg_catalog_pg_indexes")
+        ).createOrReplaceTempView("pg_catalog_pg_indexes")
         for empty_name, empty_schema in (
             ("pg_enum", "oid int, enumtypid int, enumlabel string"),
             ("pg_locks", "locktype string, relation int, pid int, granted boolean"),
@@ -1302,7 +1306,7 @@ class CrateSession:
             ("pg_stats", "schemaname string, tablename string, attname string, "
              "null_frac float, n_distinct float"),
         ):
-            spark.createDataFrame([], empty_schema).createOrReplaceTempView(
+            local_frame(spark, [], empty_schema).createOrReplaceTempView(
                 f"pg_catalog_{empty_name}"
             )
         self._register_admin_views()
@@ -1311,57 +1315,49 @@ class CrateSession:
         fdw_servers = (
             self._fdw_store.foreign_servers_rows() if self._fdw_store else []
         )
-        spark.createDataFrame(
-            fdw_servers or [("", "", "")],
+        local_frame(
+            spark, fdw_servers,
             "foreign_server_name string, foreign_data_wrapper_name string, "
             "authorization_identifier string",
-        ).filter("foreign_server_name <> ''").createOrReplaceTempView(
-            "information_schema_foreign_servers"
-        )
+        ).createOrReplaceTempView("information_schema_foreign_servers")
         fdw_tables = self._fdw_store.foreign_tables_rows() if self._fdw_store else []
-        spark.createDataFrame(
-            fdw_tables or [("", "", "")],
+        local_frame(
+            spark, fdw_tables,
             "foreign_table_name string, foreign_table_schema string, "
             "foreign_server_name string",
-        ).filter("foreign_table_name <> ''").createOrReplaceTempView(
-            "information_schema_foreign_tables"
-        )
+        ).createOrReplaceTempView("information_schema_foreign_tables")
         # pg_publication / pg_publication_tables / pg_subscription
         # (metadata/pgcatalog/PgPublicationTableInfo et al.)
         pubs = self._pub_store.pubs if self._pub_store else {}
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [
                 (name, p["owner"], p["all_tables"], True, True, True)
                 for name, p in sorted(pubs.items())
-            ]
-            or [("", "", False, False, False, False)],
+            ],
             "pubname string, pubowner string, puballtables boolean, "
             "pubinsert boolean, pubupdate boolean, pubdelete boolean",
-        ).filter("pubname <> ''").createOrReplaceTempView("pg_catalog_pg_publication")
+        ).createOrReplaceTempView("pg_catalog_pg_publication")
         pub_tables = []
         for name, p in sorted(pubs.items()):
             tnames = (
                 sorted(self._dml.crate_tables) if p["all_tables"] else p["tables"]
             )
             pub_tables += [(name, "doc", t) for t in tnames]
-        spark.createDataFrame(
-            pub_tables or [("", "", "")],
+        local_frame(
+            spark, pub_tables,
             "pubname string, schemaname string, tablename string",
-        ).filter("pubname <> ''").createOrReplaceTempView(
-            "pg_catalog_pg_publication_tables"
-        )
+        ).createOrReplaceTempView("pg_catalog_pg_publication_tables")
         subs = self._sub_store.subs if self._sub_store else {}
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [
                 (s.name, "crate", s.enabled, s.connection, [s.publication])
                 for s in sorted(subs.values(), key=lambda x: x.name)
-            ]
-            or [("", "", False, "", [""])],
+            ],
             "subname string, subowner string, subenabled boolean, "
             "subconninfo string, subpublications array<string>",
-        ).filter("subname <> ''").createOrReplaceTempView(
-            "pg_catalog_pg_subscription"
-        )
+        ).createOrReplaceTempView("pg_catalog_pg_subscription")
         # record who registered, at which catalog generation — the
         # _ensure_system_views read gate compares against this
         CrateSession._SYSVIEWS_STATE[spark] = (
@@ -1433,31 +1429,30 @@ class CrateSession:
         sys.snapshots (metadata/sys/Sys*TableInfo.java) as temp views.
         Tiny catalog rows — rebuilt on every admin mutation."""
         spark = self.spark
-        spark.createDataFrame(
-            self.roles.sys_users_rows(),
+        local_frame(
+            spark, self.roles.sys_users_rows(),
             "name string, superuser boolean, password string, "
             "granted_roles string, session_settings string",
         ).createOrReplaceTempView("sys_users")
-        spark.createDataFrame(
-            self.roles.sys_roles_rows() or [("", "")],
+        local_frame(
+            spark, self.roles.sys_roles_rows(),
             "name string, granted_roles string",
-        ).filter("name <> ''").createOrReplaceTempView("sys_roles")
-        spark.createDataFrame(
-            self.roles.sys_privileges_rows() or [("", "", "", "", "", "")],
+        ).createOrReplaceTempView("sys_roles")
+        local_frame(
+            spark, self.roles.sys_privileges_rows(),
             "class string, grantee string, grantor string, "
             "ident string, state string, type string",
-        ).filter("grantee <> ''").createOrReplaceTempView("sys_privileges")
-        spark.createDataFrame(
-            self.snapshots.sys_repositories_rows() or [("", "", "")],
+        ).createOrReplaceTempView("sys_privileges")
+        local_frame(
+            spark, self.snapshots.sys_repositories_rows(),
             "name string, type string, settings string",
-        ).filter("name <> ''").createOrReplaceTempView("sys_repositories")
-        spark.createDataFrame(
-            self.snapshots.sys_snapshots_rows()
-            or [("", "", "", [""], [""], "", "", "", "")],
+        ).createOrReplaceTempView("sys_repositories")
+        local_frame(
+            spark, self.snapshots.sys_snapshots_rows(),
             "id string, name string, repository string, tables array<string>, "
             "concrete_indices array<string>, "
             "started string, finished string, version string, state string",
-        ).filter("id <> ''").createOrReplaceTempView("sys_snapshots")
+        ).createOrReplaceTempView("sys_snapshots")
 
     # -- statements ------------------------------------------------------
     def execute(self, sql: str, params: list | None = None) -> DataFrame:
@@ -1513,7 +1508,7 @@ class CrateSession:
         schema = cur["schema"]
 
         def empty():
-            return spark.createDataFrame([], schema)
+            return local_frame(spark, [], schema)
 
         # normalize (direction, count) -> (mode, n); n None = ALL
         mode, n = direction, None
@@ -1566,7 +1561,7 @@ class CrateSession:
                 rows = [r for _, r in zip(range(n), cur["it"])]
                 cur["fetched"] += len(rows)
                 cur["pos"] = cur["fetched"]
-                return spark.createDataFrame(rows, schema)
+                return local_frame(spark, rows, schema)
             # forward ABSOLUTE / RELATIVE on a stream: skip to the
             # target row, return it
             target = n if mode == "ABSOLUTE" else pos + n
@@ -1588,7 +1583,7 @@ class CrateSession:
                         f"Cannot return row: {target}, total rows: {cur['fetched']}"
                     )
                 return empty()
-            return spark.createDataFrame([row], schema)
+            return local_frame(spark, [row], schema)
 
         # scroll path: every fetched row is buffered; backward
         # movement replays the buffer in reverse
@@ -1618,13 +1613,13 @@ class CrateSession:
                 cur["pos"] = total + 1  # fetched past the end: after last
             else:
                 cur["pos"] = pos + n
-            return spark.createDataFrame(rows, schema) if rows else empty()
+            return local_frame(spark, rows, schema)
         if mode == "BACKWARD":
             first = pos - 1  # 1-based index of first row to return
             last = 1 if n is None else max(pos - n, 1)
             rows = [buf[r - 1] for r in range(min(first, len(buf)), last - 1, -1)]
             cur["pos"] = 0 if n is None else max(pos - n, 0)
-            return spark.createDataFrame(rows, schema) if rows else empty()
+            return local_frame(spark, rows, schema)
         # ABSOLUTE / RELATIVE: jump, return the single row at the new
         # position (empty if before start / past end — except ABSOLUTE
         # past end errors, Cursor.java:219)
@@ -1641,7 +1636,7 @@ class CrateSession:
             cur["pos"] = total + 1
             return empty()
         cur["pos"] = target
-        return spark.createDataFrame([buf[target - 1]], schema)
+        return local_frame(spark, [buf[target - 1]], schema)
 
     def _dispatch(self, stmt: str) -> DataFrame:
         upper = stmt.upper()
@@ -1654,9 +1649,8 @@ class CrateSession:
         # ...but temp views REBUILD lazily: only when a statement
         # might actually read them — dotted (sys.jobs) or bare PG
         # spellings (pg_type) both count. Statements that never touch
-        # the catalog (the common DDL/DML path) skip the ~60-view
-        # rebuild entirely (~1 s each, r11 optimization round: the
-        # old eager rebuild made every lifecycle statement pay it).
+        # the catalog (the common DDL/DML path) skip the ~65-view
+        # rebuild entirely.
         # Temp views are global to the SparkSession; the generation
         # state also invalidates when ANOTHER CrateSession registered
         # last, so each session still sees its own catalog.
@@ -1693,8 +1687,8 @@ class CrateSession:
                 (self._node_check_ack.add if flag
                  else self._node_check_ack.discard)(cid)
             self._mark_sysviews_dirty()
-            return self.spark.createDataFrame(
-                [(len(ids),)], "rowcount bigint"
+            return local_frame(
+                self.spark, [(len(ids),)], "rowcount bigint"
             )
 
         # privilege enforcement + admin statements (users/roles/
@@ -1753,7 +1747,7 @@ class CrateSession:
                 settings=_parse_with(m.group(3) or ""),
             )
             self._register_blob_views()
-            return self.spark.createDataFrame([(1,)], "rowcount bigint")
+            return local_frame(self.spark, [(1,)], "rowcount bigint")
         # ALTER BLOB TABLE t SET (...) / RESET (...) — replication and
         # allocation settings are cluster-topology knobs, recorded as
         # table settings (blobs.rst "Altering a blob table")
@@ -1773,7 +1767,7 @@ class CrateSession:
                 for k in m.group(4).split(","):
                     store.settings.pop(k.strip().strip('"'), None)
             # ALTER acks with -1 rows affected (crash renders it so)
-            return self.spark.createDataFrame([(-1,)], "rowcount bigint")
+            return local_frame(self.spark, [(-1,)], "rowcount bigint")
         m = re.match(
             r"DROP\s+BLOB\s+TABLE\s+(IF\s+EXISTS\s+)?\"?([\w]+)\"?\s*$",
             stmt,
@@ -1783,8 +1777,8 @@ class CrateSession:
             dropped = self.blobs.drop(m.group(2), if_exists=bool(m.group(1)))
             if dropped:
                 self.spark.catalog.dropTempView(f"blob_{m.group(2).lower()}")
-            return self.spark.createDataFrame(
-                [(1 if dropped else 0,)], "rowcount bigint"
+            return local_frame(
+                self.spark, [(1 if dropped else 0,)], "rowcount bigint"
             )
 
         # CREATE SCHEMA [IF NOT EXISTS] name (create-schema.rst):
@@ -1805,11 +1799,11 @@ class CrateSession:
             )
             if exists:
                 if m.group(1):
-                    return self.spark.createDataFrame([(0,)], "rowcount bigint")
+                    return local_frame(self.spark, [(0,)], "rowcount bigint")
                 raise ValueError(f"Schema '{name}' already exists")
             self._schemas.add(name)
             self._mark_sysviews_dirty()
-            return self.spark.createDataFrame([(1,)], "rowcount bigint")
+            return local_frame(self.spark, [(1,)], "rowcount bigint")
 
         # DROP SCHEMA [IF EXISTS] name [, ...] [CASCADE|RESTRICT]
         # (drop-schema.rst): RESTRICT (default) refuses non-empty
@@ -1846,7 +1840,7 @@ class CrateSession:
                 self._schemas.discard(name)
                 n_dropped += 1
             self._mark_sysviews_dirty()
-            return self.spark.createDataFrame([(n_dropped,)], "rowcount bigint")
+            return local_frame(self.spark, [(n_dropped,)], "rowcount bigint")
 
         if upper.startswith("EXPLAIN"):
             analyze = re.match(r"EXPLAIN\s+(\(\s*)?ANALYZE", upper) is not None
@@ -1860,7 +1854,7 @@ class CrateSession:
             if analyze:
                 return self._explain_analyze(body)
             plan = self.explain(body)
-            return self.spark.createDataFrame([(plan,)], "plan string")
+            return local_frame(self.spark, [(plan,)], "plan string")
 
         # SET GLOBAL [PERSISTENT|TRANSIENT] assignments (set.rst; AL
         # privilege class): comma-separated `k = v` pairs, values may
@@ -1879,7 +1873,8 @@ class CrateSession:
                 # JSON spelling in the conf: booleans stay lowercase
                 self.spark.conf.set(key, _json.dumps(val) if isinstance(val, bool) else str(val))
             self._mark_sysviews_dirty()
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(k, _json.dumps(v) if isinstance(v, bool) else str(v)) for k, v in pairs],
                 "setting string, value string",
             )
@@ -1896,8 +1891,8 @@ class CrateSession:
                 except Exception:  # noqa: BLE001 - never-set key
                     pass
             self._mark_sysviews_dirty()
-            return self.spark.createDataFrame(
-                [(k,) for k in keys], "setting string"
+            return local_frame(
+                self.spark, [(k,) for k in keys], "setting string"
             )
 
         # ALTER CLUSTER REROUTE/DECOMMISSION/GC (alter-cluster.rst):
@@ -1910,7 +1905,7 @@ class CrateSession:
             re.IGNORECASE,
         )
         if m:
-            return self.spark.createDataFrame([("OK",)], "status string")
+            return local_frame(self.spark, [("OK",)], "status string")
 
         # SET [SESSION|LOCAL] key { = | TO } value|DEFAULT (set.rst,
         # config/session.rst; keys may be double-quoted, search_path
@@ -1929,14 +1924,14 @@ class CrateSession:
                     pass
             else:
                 self.spark.conf.set(key, val.strip("'\""))
-            return self.spark.createDataFrame(
-                [(key, val)], "setting string, value string"
+            return local_frame(
+                self.spark, [(key, val)], "setting string, value string"
             )
 
         m = re.match(r"RESET\s+(\S+)$", stmt, re.IGNORECASE)
         if m:
             self.spark.conf.unset(m.group(1))
-            return self.spark.createDataFrame([(m.group(1),)], "setting string")
+            return local_frame(self.spark, [(m.group(1),)], "setting string")
 
         m = re.match(
             r"CREATE\s+(OR\s+REPLACE\s+)?FUNCTION\s+"
@@ -1974,13 +1969,13 @@ class CrateSession:
             # user table
             for name in sorted(self.tables):
                 self.analyze(name)
-            return self.spark.createDataFrame([(1,)], "rowcount bigint")
+            return local_frame(self.spark, [(1,)], "rowcount bigint")
 
         m = re.match(r"SHOW\s+CREATE\s+TABLE\s+([\w.\"]+)\s*$", stmt, re.IGNORECASE)
         if m:
             name = m.group(1).strip('"').split(".")[-1]
-            return self.spark.createDataFrame(
-                [(self._show_create_table(name),)], "create_table string"
+            return local_frame(
+                self.spark, [(self._show_create_table(name),)], "create_table string"
             )
 
         # SHOW statements (reference sql/statements/show.rst;
@@ -2008,15 +2003,15 @@ class CrateSession:
         if re.match(
             r"SHOW\s+TRANSACTION\s+ISOLATION\s+LEVEL\s*$", stmt, re.IGNORECASE
         ):
-            return self.spark.createDataFrame(
-                [("read uncommitted",)], "transaction_isolation string"
+            return local_frame(
+                self.spark, [("read uncommitted",)], "transaction_isolation string"
             )
 
         m = re.match(r"SHOW\s+(\S+)\s*$", stmt, re.IGNORECASE)
         if m:
             val = self.spark.conf.get(m.group(1), None)
-            return self.spark.createDataFrame(
-                [(m.group(1), val)], "setting string, value string"
+            return local_frame(
+                self.spark, [(m.group(1), val)], "setting string, value string"
             )
 
         m = re.match(
@@ -2037,8 +2032,8 @@ class CrateSession:
             ]
             for name in names:
                 self.spark.catalog.refreshTable(name)
-            return self.spark.createDataFrame(
-                [(n,) for n in names], "refreshed string"
+            return local_frame(
+                self.spark, [(n,) for n in names], "refreshed string"
             )
 
         # Transaction statements are accepted no-ops: the engine is
@@ -2046,7 +2041,7 @@ class CrateSession:
         # visitBegin/visitCommit return NoopPlan). KILL likewise.
         m = re.match(r"(BEGIN|COMMIT|ROLLBACK|END)\b|KILL\s+", upper)
         if m:
-            return self.spark.createDataFrame([("OK",)], "status string")
+            return local_frame(self.spark, [("OK",)], "status string")
 
         # ALTER CLUSTER SWAP TABLE a TO b (alter-cluster.rst): atomic
         # name exchange — the blue/green cutover primitive
@@ -2062,7 +2057,7 @@ class CrateSession:
             self._dml.crate_tables[a], self._dml.crate_tables[b] = tb, ta
             self._dml._refresh(a)
             self._dml._refresh(b)
-            return self.spark.createDataFrame([(a, b)], "source string, target string")
+            return local_frame(self.spark, [(a, b)], "source string, target string")
 
         # More PG-client session-management no-ops (reference planner
         # visits these to NoopPlan too: deallocate.rst, discard.rst,
@@ -2074,7 +2069,7 @@ class CrateSession:
             upper,
         )
         if m:
-            return self.spark.createDataFrame([("OK",)], "status string")
+            return local_frame(self.spark, [("OK",)], "status string")
 
         # OPTIMIZE TABLE [PARTITION (...)] [WITH (...)]: parquet
         # small-file compaction — the Lucene segment-merge analog
@@ -2122,8 +2117,8 @@ class CrateSession:
                     (name, "ok", stats.get("files_before", 0),
                      stats.get("files_after", 0))
                 )
-            return self.spark.createDataFrame(
-                out_rows,
+            return local_frame(
+                self.spark, out_rows,
                 "table string, status string, files_before int, files_after int",
             )
 
@@ -2137,7 +2132,7 @@ class CrateSession:
             df = self._sql(m.group(2))
             self._views[name] = m.group(2)[:500]
             self.register(name, df)
-            return self.spark.createDataFrame([(name,)], "view string")
+            return local_frame(self.spark, [(name,)], "view string")
 
         m = re.match(r"DROP\s+VIEW\s+(IF\s+EXISTS\s+)?([\w.\"]+)\s*$", stmt, re.IGNORECASE)
         if m:
@@ -2146,7 +2141,7 @@ class CrateSession:
             self.tables.pop(name, None)
             self._views.pop(name, None)
             self._mark_sysviews_dirty()
-            return self.spark.createDataFrame([(name,)], "dropped string")
+            return local_frame(self.spark, [(name,)], "dropped string")
 
         # Cursors (reference session/Cursor.java): DECLARE / FETCH /
         # CLOSE. FETCH n streams through toLocalIterator — one
@@ -2185,7 +2180,7 @@ class CrateSession:
                 "buffer": [],  # scroll only: materialized rows
                 "pos": 0,  # scroll only: 1-based row of last fetch; 0 = before first
             }
-            return self.spark.createDataFrame([(m.group(1),)], "cursor string")
+            return local_frame(self.spark, [(m.group(1),)], "cursor string")
 
         m = re.match(
             r"FETCH\s+(?:(NEXT|PRIOR|FORWARD|BACKWARD|ABSOLUTE|RELATIVE)\s+)?"
@@ -2209,7 +2204,7 @@ class CrateSession:
             closed = list(self._cursors) if target == "all" else [target]
             for name in closed:
                 self._cursors.pop(name, None)
-            return self.spark.createDataFrame([(n,) for n in closed] or [("",)], "closed string")
+            return local_frame(self.spark, [(n,) for n in closed] or [("",)], "closed string")
 
         # CREATE ANALYZER (reference FulltextAnalyzerResolver.java,
         # create-analyzer.rst): register a named tokenizer config that
@@ -2228,12 +2223,12 @@ class CrateSession:
                 "extends": (m.group(2) or "").lower() or None,
                 "definition": body.strip(),
             }
-            return self.spark.createDataFrame([(m.group(1),)], "analyzer string")
+            return local_frame(self.spark, [(m.group(1),)], "analyzer string")
 
         m = re.match(r"DROP\s+ANALYZER\s+\"?(\w+)\"?\s*$", stmt, re.IGNORECASE)
         if m:
             self._analyzers.pop(m.group(1).lower(), None)
-            return self.spark.createDataFrame([(m.group(1),)], "dropped string")
+            return local_frame(self.spark, [(m.group(1),)], "dropped string")
 
         # MATCH against a NAMED fulltext index searches its source
         # columns (fulltext-indices.rst composite indexes) — resolved
@@ -2354,7 +2349,7 @@ class CrateSession:
         registered source tables."""
         ct = self._dml.crate_tables.get(name)
         if ct is not None:
-            fields = self.spark.createDataFrame([], ct.schema_ddl).schema.fields
+            fields = ddl_schema(ct.schema_ddl).fields
 
             def _decl_type(decl, indent):
                 # declared crate spelling; objects nest their
@@ -2712,8 +2707,8 @@ class CrateSession:
             raise ValueError(f"unknown table '{table}' for knn_match")
         docs = self.tables[table]
         id_col = docs.columns[0]
-        queries = self.spark.createDataFrame(
-            [(0, vec)], f"q_id bigint, {col} array<float>"
+        queries = local_frame(
+            self.spark, [(0, vec)], f"q_id bigint, {col} array<float>"
         )
         topk = knn_exact(
             docs, queries, k,
@@ -2957,7 +2952,8 @@ class CrateSession:
         }
         self._register_udf_dispatch(schema, name.strip('`"').lower())
         self._mark_sysviews_dirty()
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [(f"{schema}.{name}", ret_type)], "function string, returns string"
         )
 
@@ -3026,7 +3022,7 @@ class CrateSession:
         schema, _, name = qname.rpartition(".")
         schema = (schema or self._search_path()[0]).lower()
         key = (schema, name.strip('`"').lower())
-        empty = self.spark.createDataFrame([], "dropped string")
+        empty = local_frame(self.spark, [], "dropped string")
         overloads = self._udfs.get(key)
         if overloads is None:
             if if_exists:
@@ -3058,7 +3054,7 @@ class CrateSession:
                 )
             )
         self._mark_sysviews_dirty()
-        return self.spark.createDataFrame([(qname,)], "dropped string")
+        return local_frame(self.spark, [(qname,)], "dropped string")
 
     def _explain_analyze(self, body: str) -> DataFrame:
         """EXPLAIN ANALYZE: execute the statement and report per-phase
@@ -3081,8 +3077,8 @@ class CrateSession:
             ("plan", plan_text.strip().split("\n")[0], (t1 - t0) * 1000.0, None),
             ("execute", physical.strip().split("\n")[0], (t2 - t1) * 1000.0, rows),
         ]
-        return self.spark.createDataFrame(
-            out, "phase string, detail string, millis double, rows bigint"
+        return local_frame(
+            self.spark, out, "phase string, detail string, millis double, rows bigint"
         )
 
     def explain(self, sql: str) -> str:
@@ -3102,7 +3098,7 @@ class CrateSession:
             status = "analyzed"
         except Exception:
             status = "skipped (temp view)"
-        return self.spark.createDataFrame([(table, status)], "table string, status string")
+        return local_frame(self.spark, [(table, status)], "table string, status string")
 
 
 #: cluster settings surfaced in sys.cluster.settings — the full

@@ -23,6 +23,8 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
+from crate_spark.session import local_frame
+
 
 class FdwError(Exception):
     """FDW catalog failure (unknown server, duplicate, bad wrapper)."""
@@ -223,7 +225,7 @@ def route_fdw(session, stmt: str):
     store: FdwStore = session.fdw
 
     def ok(n: int = 1):
-        return spark.createDataFrame([(n,)], "rowcount bigint")
+        return local_frame(spark, [(n,)], "rowcount bigint")
 
     m = re.match(
         r"CREATE\s+SERVER\s+(IF\s+NOT\s+EXISTS\s+)?\"?([\w]+)\"?\s+"

@@ -14,6 +14,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from crate_spark.session import local_frame
+
 
 def quant_scale(vec) -> F.Column:
     """Per-vector scale: max |v| / 127 (symmetric, zero-point-free).
@@ -361,6 +363,22 @@ def pq_adc_distance_expr(codes, qvec, codebooks) -> F.Column:
     return total
 
 
+def _nearest_cells_np(qarr, centroids, nprobe: int):
+    """Driver-side twin of ``knn._nearest_cells_sql``: the ``nprobe``
+    nearest centroid ids per row of ``qarr``. Parity with the SQL fold
+    is exact: (q - c)^2 elementwise then cumsum[..., -1] reproduces the
+    left-to-right aggregate rounding step for step, and the stable
+    argsort ties like array_sort on the (d, cid) struct
+    (tests/test_dedup.py pins it, ties included)."""
+    import numpy as np
+
+    cents_arr = np.asarray(centroids, dtype=np.float64)
+    qdiff = qarr[:, None, :] - cents_arr[None, :, :]
+    return np.argsort(
+        np.cumsum(qdiff * qdiff, axis=2)[:, :, -1], axis=1, kind="stable"
+    )[:, :nprobe]
+
+
 def _knn_pq_ivf_routed(
     corpus,
     queries,
@@ -431,20 +449,13 @@ def _knn_pq_ivf_routed(
     # the query vectors are already in hand, so evaluating
     # _nearest_cells on the broadcast batch would re-ship the centroid
     # literal a second time in the SQL text (~20 KB of parse per
-    # build) to compute 200 rows. numpy parity with the SQL fold is
-    # exact: (q - c)^2 elementwise then cumsum[..., -1] reproduces the
-    # left-to-right aggregate rounding step for step, and the stable
-    # argsort ties like array_sort on the (d, cid) struct — verified
-    # bit-identical over the full sf0.01 AND sf0.1 corpora (0 diffs).
-    cents_arr = np.asarray(centroids, dtype=np.float64)
-    qdiff = qarr[:, None, :] - cents_arr[None, :, :]
-    qcells = np.argsort(
-        np.cumsum(qdiff * qdiff, axis=2)[:, :, -1], axis=1, kind="stable"
-    )[:, :nprobe]
-    # verifySchema=False: the rows are built right here with exact
+    # build) to compute 200 rows.
+    qcells = _nearest_cells_np(qarr, centroids, nprobe)
+    # verify=False: the rows are built right here with exact
     # types; per-element verification was ~0.1 s of the per-batch plan
     # build (r11 optimization-round profile)
-    qdf = corpus.sparkSession.createDataFrame(
+    qdf = local_frame(
+        corpus.sparkSession,
         [
             (
                 int(qid),
@@ -456,7 +467,7 @@ def _knn_pq_ivf_routed(
         ],
         "query_id bigint, _qvec array<double>, _lut array<array<double>>,"
         " _cells array<int>",
-        verifySchema=False,
+        verify=False,
     )
     # The whole post-encode pipeline compiles to ONE spark.sql
     # statement (r12 optimization round): the r11 shape was 7 chained
@@ -569,7 +580,7 @@ def knn_pq(
 
     schema = "query_id bigint, neighbor_id bigint, l2_dist double"
     if not queries:  # before codebook training — no sample job to waste
-        return corpus.sparkSession.createDataFrame([], schema)
+        return local_frame(corpus.sparkSession, [], schema)
     route_threshold = int(
         corpus.sparkSession.conf.get("crate_spark.vector.pq_route_threshold", "64")
     )

@@ -20,6 +20,7 @@ import uuid
 from pyspark.sql import functions as F
 
 from crate_spark.queries import query
+from crate_spark.session import local_frame
 
 
 @query(
@@ -51,8 +52,8 @@ def dml_lifecycle(spark, sf_dir):
     )
 
     def rows(data):
-        return spark.createDataFrame(
-            data, "id int, val string, cnt int, ts string"
+        return local_frame(
+            spark, data, "id int, val string, cnt int, ts string"
         ).withColumn("ts", F.col("ts").cast("timestamp_ntz"))
 
     t.insert(rows([(1, "a", 10, "2024-01-01 08:00:00"),

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from crate_spark.functions import array_sum, date_bin
 from crate_spark.queries import query
-from crate_spark.session import load_tables
+from crate_spark.session import load_tables, local_frame
 
 
 @query(
@@ -738,7 +738,7 @@ def scalar_blake3(spark, sf_dir):
     tests/test_functions.py."""
     from crate_spark.functions.scalar import blake3
 
-    df = spark.createDataFrame(
-        [("",), ("crate",), ("©rate",), ("foo",)], "v string"
+    df = local_frame(
+        spark, [("",), ("crate",), ("©rate",), ("foo",)], "v string"
     )
     return df.select("v", blake3("v").alias("h"))

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from crate_spark.queries import query
-from crate_spark.session import load_tables
+from crate_spark.session import load_tables, local_frame
 
 
 @query(
@@ -167,7 +167,7 @@ def tf_pg_get_keywords(spark, sf_dir):
     """``pg_get_keywords()`` (pg-compat; reference
     ``PgGetKeywordsFunction``) — the documented reserved-word subset as
     a relation."""
-    return spark.createDataFrame(PG_KEYWORDS, "word string, catcode string")
+    return local_frame(spark, PG_KEYWORDS, "word string, catcode string")
 
 
 @query("tf_empty_row", oracle="SELECT 42 AS answer")

@@ -20,14 +20,40 @@ Scale notes (100 TB design intent, tested at local[32]):
   outright, so we read them as raw longs
   (``spark.sql.legacy.parquet.nanosAsLong``) and convert to µs — the
   same truncation DuckDB applies, keeping oracle comparisons exact.
+
+Driver-local relations: catalog views (``information_schema``,
+``sys.*``, ``pg_catalog``), status replies (the ``rowcount`` of an
+INSERT ... VALUES, ``status``, ``dropped``, cursor fetches) and
+``CrateTable.insert_values`` batches are rows the driver already holds;
+CrateDB answers them on the coordinator without a distributed job.
+``local_frame`` ships such rows to the JVM as one Arrow table, which
+Spark plans as a ``LocalRelation`` below
+``spark.sql.execution.arrow.localRelationThreshold``: collecting it
+runs no Spark job and no Python worker. A plain
+``createDataFrame(<list>, ddl)`` instead plans a ``LogicalRDD`` over a
+pickled Python RDD, so every read of it is a job with Python-worker
+tasks; ``tests/test_local_frame.py`` keeps that path out of
+``crate_spark/``.
 """
 
 from __future__ import annotations
 
+import decimal
+import functools
 import os
+from typing import Any, Iterable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import (
+    DecimalType,
+    StructType,
+    _create_converter,
+    _make_type_verifier,
+    _parse_datatype_string,
+)
 
 #: Tables provided by the driver (TESTDATA.md). One parquet file each.
 TABLES = (
@@ -71,6 +97,58 @@ def apply_runtime_confs(spark: SparkSession) -> None:
             spark.conf.set(key, value)
         except Exception:
             pass  # static conf on this build — keep going
+
+
+@functools.lru_cache(maxsize=512)
+def ddl_schema(ddl: str) -> StructType:
+    """The ``StructType`` of a DDL column list such as ``"a int, b
+    string"``, parsed once per process (each parse is a JVM round trip).
+    The result is shared between callers and must not be mutated."""
+    schema = _parse_datatype_string(ddl)
+    if not isinstance(schema, StructType):
+        raise TypeError(f"not a column list: {ddl!r}")
+    return schema
+
+
+#: Spark's widest decimal, rounding as ``java.math.BigDecimal.setScale``
+#: does for the list path
+_DEC38 = decimal.Context(prec=38, rounding=decimal.ROUND_HALF_UP)
+
+
+def local_frame(
+    spark: SparkSession,
+    rows: Iterable[Any],
+    schema: str | StructType,
+    verify: bool = True,
+) -> DataFrame:
+    """A DataFrame over driver-held ``rows``, planned as a JVM
+    ``LocalRelation`` (see the module docstring). Gives the rows and
+    schema ``createDataFrame(rows, schema)`` gives and raises its
+    verification errors: rows are checked (unless ``verify`` is false)
+    and converted to Spark's internal values by the list path's own
+    functions, so naive ``datetime``s in ``timestamp`` columns still
+    localize with the process time zone. Top-level decimals round
+    half-up to their scale as the JVM rounds them; pyarrow refuses a
+    nested decimal with excess scale."""
+    struct = ddl_schema(schema) if isinstance(schema, str) else schema
+    rows = list(rows)
+    if verify:
+        verify_row = _make_type_verifier(struct)
+        for row in rows:
+            verify_row(row)
+    to_tuple = _create_converter(struct)
+    internal = [struct.toInternal(to_tuple(row)) for row in rows]
+    arrow_schema = to_arrow_schema(struct)
+    columns = list(zip(*internal)) if internal else [()] * len(struct.fields)
+    arrays = []
+    for values, field, arrow_field in zip(columns, struct.fields, arrow_schema):
+        if isinstance(field.dataType, DecimalType):
+            quantum = decimal.Decimal(1).scaleb(-field.dataType.scale)
+            values = [v if v is None else v.quantize(quantum, context=_DEC38) for v in values]
+        arrays.append(pa.array(values, type=arrow_field.type))
+    return spark.createDataFrame(
+        pa.Table.from_arrays(arrays, schema=arrow_schema), struct
+    )
 
 
 def get_spark(

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from crate_spark.dialect import rewrite
 from crate_spark.dml import CrateTable
+from crate_spark.session import ddl_schema, local_frame
 
 #: CrateDB type spellings -> Spark DDL types
 #: (reference ``types/DataTypes.java``; object columns are stored as
@@ -301,7 +302,7 @@ class SqlDmlRouter:
         timestamp_millis() for every timestamp column of the table."""
         ts_cols = [
             f.name
-            for f in self.spark.createDataFrame([], table.schema_ddl).schema.fields
+            for f in ddl_schema(table.schema_ddl).fields
             if f.dataType.simpleString() in ("timestamp", "timestamp_ntz")
         ]
         for col in ts_cols:
@@ -318,7 +319,7 @@ class SqlDmlRouter:
         return where
 
     def _count_df(self, n: int) -> DataFrame:
-        return self.spark.createDataFrame([(n,)], "rowcount bigint")
+        return local_frame(self.spark, [(n,)], "rowcount bigint")
 
     # -- dispatch --------------------------------------------------------
     def route(self, stmt: str) -> DataFrame | None:
@@ -640,7 +641,7 @@ class SqlDmlRouter:
         }
         for cname in untyped_generated:
             typed = ", ".join(c for c in cols if " " in c)
-            probe = self.spark.createDataFrame([], typed or "__x int")
+            probe = local_frame(self.spark, [], typed or "__x int")
             dt = probe.selectExpr(
                 f"({generated_eval[cname]}) AS __g"
             ).schema[0].dataType.simpleString()
@@ -867,7 +868,7 @@ class SqlDmlRouter:
         elif m.group(4):  # DROP COLUMN
             col = m.group(4)
             fields = [
-                f for f in self.spark.createDataFrame([], table.schema_ddl).schema.fields
+                f for f in ddl_schema(table.schema_ddl).fields
                 if f.name != col
             ]
             if table._has_data():
@@ -925,7 +926,7 @@ class SqlDmlRouter:
                     )
             else:
                 old, new = ocol, ncol
-                fields = self.spark.createDataFrame([], table.schema_ddl).schema.fields
+                fields = ddl_schema(table.schema_ddl).fields
                 renamed = (
                     table.read().withColumnRenamed(old, new)
                     if table._has_data() else None
@@ -994,7 +995,7 @@ class SqlDmlRouter:
             body,
             re.IGNORECASE | re.DOTALL,
         )
-        declared = self.spark.createDataFrame([], table.schema_ddl).schema
+        declared = ddl_schema(table.schema_ddl)
         declared_types = {f.name: f.dataType.simpleString() for f in declared.fields}
         if cm:
             if cm.group(2).upper() == "NOTHING":
@@ -1053,7 +1054,7 @@ class SqlDmlRouter:
                 dt = widen.get(dt, dt)
                 table.schema_ddl += f", {c} {dt}"
             table._save_meta()
-            declared = self.spark.createDataFrame([], table.schema_ddl).schema
+            declared = ddl_schema(table.schema_ddl)
             declared_types = {
                 f.name: f.dataType.simpleString() for f in declared.fields
             }
@@ -1205,8 +1206,8 @@ class SqlDmlRouter:
                 delimiter=props.get("delimiter", ","),
             )
             self._refresh(name)
-            return self.spark.createDataFrame(
-                [(summary["loaded"], summary["errors"])],
+            return local_frame(
+                self.spark, [(summary["loaded"], summary["errors"])],
                 "loaded bigint, errors bigint",
             )
         cols = (

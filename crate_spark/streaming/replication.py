@@ -37,6 +37,8 @@ import os
 import re
 from dataclasses import dataclass, field
 
+from crate_spark.session import ddl_schema, local_frame
+
 
 class ReplicationError(Exception):
     """Publication/subscription failure."""
@@ -185,7 +187,7 @@ class SubscriptionStore:
                 defaults=remote.defaults,
                 settings=remote.settings,
             )
-            schema = session.spark.createDataFrame([], remote.schema_ddl).schema
+            schema = ddl_schema(remote.schema_ddl)
             ckpt = os.path.join(
                 session.storage_dir, f"_sub_ckpt_{key}_{tname}"
             )
@@ -250,7 +252,7 @@ def route_replication(session, stmt: str):
     spark = session.spark
 
     def ok(n: int = 1):
-        return spark.createDataFrame([(n,)], "rowcount bigint")
+        return local_frame(spark, [(n,)], "rowcount bigint")
 
     m = re.match(
         r"CREATE\s+PUBLICATION\s+\"?([\w]+)\"?\s+FOR\s+"

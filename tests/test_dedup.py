@@ -136,3 +136,57 @@ def test_knn_lsh_bucket_cap(spark):
     # cap below every bucket population -> no candidates survive
     none = knn_lsh_cosine(emb, q, k=5, dim=64, max_bucket_size=1)
     assert none.count() == 0
+
+
+def test_minhash_null_text_is_never_a_candidate(spark):
+    """A NULL text has no shingles, so it cannot be near anything. Its
+    signature is NULL, and every band bucket of a NULL signature hashes
+    to the same seed, so without a filter all NULL docs pair up in
+    every band."""
+    from crate_spark.session import local_frame
+
+    text = "the quick brown fox jumps over the lazy dog again and again"
+    docs = local_frame(
+        spark,
+        [(1, text), (2, text), (3, None), (4, None), (5, "something else entirely")],
+        "doc_id bigint, text string",
+    )
+    pairs = {
+        (r["id_a"], r["id_b"]): r["n_shared_bands"]
+        for r in dd.minhash_lsh_candidates(docs, "text", "doc_id").collect()
+    }
+    assert pairs == {(1, 2): 8}
+
+
+def test_routed_pq_probe_cells_match_sql(spark):
+    """The routed-PQ batch computes each query's probe cells in numpy;
+    they must equal ``_nearest_cells_sql`` evaluated by Spark, ties
+    included. Small-integer coordinates make equal distances common,
+    and both sides must then order by centroid id."""
+    import numpy as np
+
+    from crate_spark.operators.knn import _nearest_cells_sql
+    from crate_spark.operators.quant import _nearest_cells_np
+    from crate_spark.session import local_frame
+
+    rng = np.random.default_rng(7)
+    dim, n_cents, nprobe = 6, 12, 5
+    cents = rng.integers(-2, 3, size=(n_cents, dim)).astype(np.float64)
+    cents[1] = cents[0]  # an exact duplicate centroid always ties
+    qarr = np.vstack([
+        rng.integers(-2, 3, size=(40, dim)).astype(np.float64),
+        rng.normal(size=(40, dim)),
+    ])
+    want = _nearest_cells_np(qarr, cents, nprobe).tolist()
+    qdf = local_frame(
+        spark,
+        [(i, [float(x) for x in q]) for i, q in enumerate(qarr)],
+        "qid int, v array<double>",
+    )
+    got = dict(
+        qdf.select("qid", F.expr(_nearest_cells_sql("v", cents, nprobe)).alias("c"))
+        .collect()
+    )
+    assert [got[i] for i in range(len(qarr))] == want
+    d = ((qarr[:, None, :] - cents[None, :, :]) ** 2).sum(-1)
+    assert any(len(set(row[: nprobe + 1])) <= nprobe for row in np.sort(d, axis=1))

@@ -448,3 +448,48 @@ def test_bm25_scoring_is_map_only(spark):
     low = plan.lower()
     assert low.count("hashpartitioning") == 0, plan
     assert low.count("singlepartition") <= 1, plan
+
+
+@pytest.fixture
+def crate(spark, tmp_path):
+    from crate_spark.engine import CrateSession
+
+    s = CrateSession(spark, SF_DIR, storage_dir=str(tmp_path))
+    s.execute("CREATE TABLE t (id INTEGER, v TEXT)")
+    return s
+
+
+@pytest.mark.parametrize("stmt", [
+    "REFRESH TABLE t",
+    "INSERT INTO t (id, v) VALUES (1, 'a'), (2, 'b')",
+    "SELECT table_name, number_of_shards FROM information_schema.tables "
+    "WHERE table_schema = 'doc'",
+    "SELECT * FROM sys.shards",
+    "BEGIN",
+])
+def test_driver_built_rows_plan_a_local_relation(crate, stmt):
+    """Status replies and catalog views are rows the driver holds;
+    they must reach Spark as a LocalRelation, never as a LogicalRDD
+    over a pickled Python RDD."""
+    plan = crate.execute(stmt)._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation" in plan
+    assert "LogicalRDD" not in plan
+
+
+def test_status_replies_collect_without_spark_jobs(crate, spark):
+    tracker = spark.sparkContext.statusTracker()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def last_job():
+        bus.waitUntilEmpty(10_000)  # job starts reach the tracker async
+        return max(tracker.getJobIdsForGroup(None), default=-1)
+
+    for stmt, want in [
+        ("INSERT INTO t (id, v) VALUES (1, 'a'), (2, 'b')", [(2,)]),
+        ("REFRESH TABLE t", [("t",)]),
+        ("BEGIN", [("OK",)]),
+    ]:
+        df = crate.execute(stmt)
+        before = last_job()
+        assert [tuple(r) for r in df.collect()] == want
+        assert last_job() == before, stmt
