@@ -21,8 +21,9 @@ from __future__ import annotations
 
 import itertools
 import json as _json
+import os
 import re
-import weakref
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -182,6 +183,981 @@ _COLUMNS_SELF_ROWS = [
 ]
 
 
+# -- system catalog -----------------------------------------------------------
+# information_schema.*, sys.* and pg_catalog.* are temp views named
+# <schema>_<relation> (the dialect rewrites the dotted spelling).
+# _SYSTEM_VIEWS maps each name to its DDL and a rows builder over the
+# live CrateSession (the reference's Sys/InformationSchema/PgCatalog
+# TableDefinitions: relation name -> row supplier). Views are built from
+# live session state when a statement names them
+# (CrateSession._ensure_system_views), and nothing is cached: no
+# mutation has to invalidate anything, and since the naming statement
+# rebuilds its views from its own session, a session never reads views
+# another session on the same SparkSession registered earlier.
+
+#: a catalog relation named in a statement, dotted or already rewritten
+_SYSTEM_VIEW_RE = re.compile(
+    r"\b(information_schema|sys|pg_catalog)\s*[._]\s*(\w+)", re.IGNORECASE
+)
+
+#: sys.jobs / sys.operations node object: this Spark driver
+_NODE = ("n1", "crate")
+
+
+def _no_rows(s) -> list:
+    return []
+
+
+def _nested(flat) -> dict:
+    """Dotted (key, value) pairs -> the nested settings object
+    (settings['stats']['enabled'] subscripts resolve against it)."""
+    out: dict = {}
+    for k, v in flat:
+        node = out
+        parts = k.split(".")
+        for p in parts[:-1]:
+            node = node.setdefault(p, {})
+        node[parts[-1]] = v
+    return out
+
+
+def _live_partitions(path: str) -> list[str]:
+    """Partition directories of a PARTITIONED BY table that hold data
+    files: whole-partition DELETE drops the contents
+    (partitioned-tables.rst:301-318) and may leave the empty directory
+    behind."""
+    return [
+        e for e in sorted(os.listdir(path))
+        if "=" in e and os.path.isdir(os.path.join(path, e))
+        and any(
+            f.endswith(".parquet")
+            for _r, _d, fs in os.walk(os.path.join(path, e))
+            for f in fs
+        )
+    ]
+
+
+def _information_schema_tables(s) -> list[tuple]:
+    crate_tables = s._dml.crate_tables
+
+    def _shards_of(n):
+        # the reference's single-node default is 4 shards when
+        # CLUSTERED INTO is not declared (NumberOfShards.java)
+        ct = crate_tables.get(n)
+        return (ct.shards or 4) if ct is not None else 1
+
+    def _replicas_of(n):
+        # reference default is the '0-1' range (create-table.rst);
+        # replicas is TEXT in the reference schema. Registered
+        # parquet sources report '0' (no replication to configure)
+        ct = crate_tables.get(n)
+        if ct is None:
+            return "0"
+        return str(ct.settings.get("number_of_replicas", "0-1"))
+
+    def _clustered_by(n):
+        # routing column (information-schema.rst:163-177): the
+        # declared CLUSTERED BY column, '_id' when none, first PK
+        # when only a PK is declared
+        ct = crate_tables.get(n)
+        if ct is None:
+            return "_id"
+        if ct.clustered_by:
+            return ct.clustered_by[0]
+        return ct.primary_key[0] if ct.primary_key else "_id"
+
+    def _settings_json(n):
+        # nested settings object from the flat dotted keys
+        # (information-schema.rst:238-247; numbers stay numeric)
+        ct = crate_tables.get(n)
+        if ct is None or not ct.settings:
+            return None
+        return _json.dumps(_nested(
+            (k, int(v) if isinstance(v, str) and v.lstrip("-").isdigit() else v)
+            for k, v in ct.settings.items()
+        ))
+
+    #: version['created'] for user tables (reference stamps the
+    #: CrateDB version that created the table; doc reindex example)
+    _tbl_version = ("6.5.0", None)
+    rows = []
+    for name in sorted(s.tables):
+        if name in s._views:
+            # SQL views list as VIEW with NULL shards/replicas
+            rows.append(
+                (name, s._table_schema.get(name, "doc"), "VIEW",
+                 None, None, None, None, None, None)
+            )
+        else:
+            ct = crate_tables.get(name)
+            rows.append(
+                (name, s._table_schema.get(name, "doc"), "BASE TABLE",
+                 _shards_of(name), _replicas_of(name),
+                 _clustered_by(name),
+                 (list(ct.partitioned_by) or None) if ct is not None else None,
+                 _settings_json(name), _tbl_version)
+            )
+    if s._blob_store is not None:
+        rows += [
+            (name, "blob", "BASE TABLE", 1, "0", "digest", None, None,
+             _tbl_version)
+            for name in sorted(s._blob_store.tables)
+        ]
+    # the reference's fixed catalog inventory
+    # (information-schema.rst:67-156): every system table listed
+    # with NULL shards/replicas
+    for sch, names in _SYSTEM_TABLE_INVENTORY.items():
+        rows += [
+            (t, sch, "BASE TABLE", None, None, None, None, None, None)
+            for t in names
+        ]
+    # blobs_path: blob-storage custom location (blob tables only;
+    # always NULL here — blobs live in the store's own directory)
+    return [r + (None,) for r in rows]
+
+
+def _information_schema_routines(s) -> list[tuple]:
+    # RoutineInfos.java: the Lucene analysis inventory + custom
+    # analyzers + CREATE FUNCTION UDFs
+    rows = [
+        (n, rtype) for rtype, names in _ROUTINE_INVENTORY.items() for n in names
+    ]
+    rows += [(n, "ANALYZER") for n in s._analyzers]
+    rows += [(f"{sch}.{n}", "FUNCTION") for (sch, n) in s._udfs]
+    return rows
+
+
+def _information_schema_sql_features(s) -> list[tuple]:
+    # the SQL-standard feature conformance matrix
+    # (resources/sql_features.tsv — data resource, see
+    # resources/README.md; information-schema.rst sql_features section)
+    rows = []
+    path = os.path.join(os.path.dirname(__file__), "resources", "sql_features.tsv")
+    with open(path) as fh:
+        for line in fh:
+            parts = (line.rstrip("\n").split("\t") + [""] * 7)[:7]
+            # YES/NO -> TRUE/FALSE (reference renders boolean)
+            parts[4] = "TRUE" if parts[4] == "YES" else "FALSE"
+            rows.append(tuple(parts[:5]) + tuple(p or None for p in parts[5:]))
+    return rows
+
+
+def _information_schema_views(s) -> list[tuple]:
+    # information-schema.rst:260-300: definition is the stored SQL
+    # text (the reference re-prints its AST; we keep the user's text —
+    # declared divergence)
+    return [
+        ("crate", s._table_schema.get(n, "doc"), n, d, "NONE", False,
+         s.current_user)
+        for n, d in sorted(s._views.items())
+    ]
+
+
+def _information_schema_schemata(s) -> list[tuple]:
+    # schemata.rst / InformationSchemataTableInfo: built-ins + implicit
+    # schemas of live tables + explicitly created (possibly empty)
+    # schemas
+    return [
+        ("crate", n)
+        for n in sorted(
+            {"blob", "doc", "information_schema", "pg_catalog", "sys"}
+            | set(s._table_schema.values())
+            | s._schemas
+        )
+    ]
+
+
+def _information_schema_table_partitions(s) -> list[tuple]:
+    # TablePartitionsTableInfo: one row per live partition of a
+    # PARTITIONED BY table, values read from the partition directory
+    # layout
+    from datetime import datetime, timezone
+    from urllib.parse import unquote
+
+    rows = []
+    for name, ct in sorted(s._dml.crate_tables.items()):
+        if not ct.partitioned_by:
+            continue
+        decl_types = {c["name"]: c["type"] for c in getattr(ct, "crate_columns", [])}
+        for entry in _live_partitions(ct.path):
+            # values are typed per the declared partition column
+            # (TablePartitionsTableInfo renders timestamps as epoch
+            # millis, numerics as numbers); dir segments are
+            # URL-encoded by the parquet writer
+            vals = {}
+            for seg in entry.split("/"):
+                k, _, v = seg.partition("=")
+                v = unquote(v)
+                t = decl_types.get(k, "")
+                if t.startswith("timestamp") or t == "date":
+                    try:
+                        dt = datetime.fromisoformat(v)
+                        if dt.tzinfo is None:
+                            dt = dt.replace(tzinfo=timezone.utc)
+                        vals[k] = int(dt.timestamp() * 1000)
+                    except ValueError:
+                        vals[k] = v
+                elif t in ("integer", "bigint", "smallint", "byte"):
+                    try:
+                        vals[k] = int(v)
+                    except ValueError:
+                        vals[k] = v
+                else:
+                    vals[k] = v
+            rows.append(
+                (name, s._table_schema.get(name, "doc"), entry,
+                 _json.dumps(vals), ct.shards or 4, 0)
+            )
+    return rows
+
+
+def _information_schema_columns(s) -> list[tuple]:
+    # the reference's shape (information-schema.rst:363-381): crate
+    # data_type names, object columns expanded into col['sub'] rows —
+    # subcolumns take the ordinals right after their parent, in
+    # declaration order — for SQL-created tables with declared DDL;
+    # registered parquet sources fall back to spark-type-derived names
+    from crate_spark.cluster_settings import SETTINGS_COLUMNS
+    from crate_spark.sql_dml import _spark_to_crate
+
+    rows = []
+    for name, df in sorted(s.tables.items()):
+        ct = s._dml.crate_tables.get(name)
+        schema_name = s._table_schema.get(name, "doc")
+        if ct is not None and getattr(ct, "crate_columns", None):
+            pos = 0
+
+            def _emit(decl, prefix=""):
+                nonlocal pos
+                pos += 1
+                path = f"{prefix}['{decl['name']}']" if prefix else decl["name"]
+                rows.append((name, schema_name, path, pos, decl["type"], True))
+                for child in decl.get("children") or []:
+                    _emit(child, path)
+
+            for decl in ct.crate_columns:
+                _emit(decl)
+        else:
+            for pos, f in enumerate(df.schema.fields, start=1):
+                rows.append(
+                    (name, schema_name, f.name, pos,
+                     _spark_to_crate(f.dataType.simpleString()), f.nullable)
+                )
+    # self-description (information-schema.rst:395-447)
+    rows += [
+        ("columns", "information_schema", cname, pos, dtype, True)
+        for pos, (cname, dtype) in enumerate(_COLUMNS_SELF_ROWS, start=1)
+    ]
+    # sys.cluster with the full documented settings subscript tree
+    # (system-information.rst:86-215; CrateSettings registry)
+    sys_cluster_cols = (
+        [("id", "text"), ("license", "object"),
+         ("master_node", "text"), ("name", "text")]
+        + list(SETTINGS_COLUMNS)
+        + [("state", "text")]
+    )
+    rows += [
+        ("cluster", "sys", cname, pos, dtype, True)
+        for pos, (cname, dtype) in enumerate(sys_cluster_cols, start=1)
+    ]
+    return rows
+
+
+def _information_schema_table_constraints(s) -> list[tuple]:
+    # reference InformationSchemaTableDefinitions: PK constraints of
+    # SQL-created tables, what \d and ORMs introspect. PG-style pkey
+    # naming; NOT NULL columns surface as CHECK rows named
+    # {schema}_{table}_{col}_not_null; information_schema's own tables
+    # table has a PK (information-schema.rst:600-608)
+    rows = [("tables_pkey", "tables", "information_schema", "PRIMARY KEY")]
+    for name, ct in sorted(s._dml.crate_tables.items()):
+        sch = s._table_schema.get(name, "doc")
+        if ct.primary_key:
+            rows.append((f"{name}_pkey", name, sch, "PRIMARY KEY"))
+        rows += [
+            (f"{sch}_{name}_{col}_not_null", name, sch, "CHECK")
+            for col in getattr(ct, "not_null", [])
+        ]
+        rows += [
+            (f"{name}_check_{i}", name, sch, "CHECK")
+            for i in range(len(ct.checks))
+        ]
+    return rows
+
+
+def _information_schema_key_column_usage(s) -> list[tuple]:
+    return [
+        (f"{name}_pkey", name, s._table_schema.get(name, "doc"), col, pos)
+        for name, ct in sorted(s._dml.crate_tables.items())
+        for pos, col in enumerate(ct.primary_key, start=1)
+    ]
+
+
+def _sys_cluster(s) -> list[tuple]:
+    # the live settings object: SET GLOBAL overrides on top of the full
+    # documented defaults tree (cluster_settings.py), rendered as the
+    # nested JSON object (runtime-config.rst, system-information.rst)
+    settings = _nested({**_CLUSTER_SETTING_DEFAULTS, **s._cluster_settings}.items())
+    return [(
+        "cluster-1", s.cluster_name, "n1", None, s.spark.version,
+        s.spark.sparkContext.defaultParallelism,
+        _json.dumps(settings, sort_keys=True),
+    )]
+
+
+def _sys_nodes(s) -> list[tuple]:
+    # SysNodesTableInfo: one "node" = this Spark driver
+    import socket
+
+    return [("n1", socket.gethostname(), socket.gethostname(),
+             s.spark.version, s.spark.sparkContext.defaultParallelism,
+             {"http": 4200, "psql": 5432, "transport": 4300})]
+
+
+def _shard_rows(s) -> list[tuple]:
+    """One started primary per shard (SysShardsTableInfo) with REAL
+    storage stats: SQL-created tables report their parquet footprint,
+    one routed shard row per CLUSTERED shard; registered sources one
+    shard without stats. Backs sys.shards and sys.allocations."""
+    import pyarrow.parquet as _pq
+
+    rows = []
+    for n in sorted(s.tables):
+        ct = s._dml.crate_tables.get(n)
+        if ct is None:
+            rows.append((n, "doc", 0, True, "STARTED", None, None, None))
+            continue
+        size = n_files = n_rows = 0
+        for root, _d, files in os.walk(ct.path):
+            for f in files:
+                if f.endswith(".parquet"):
+                    n_files += 1
+                    full_f = os.path.join(root, f)
+                    size += os.path.getsize(full_f)
+                    # num_docs from the parquet FOOTER — a metadata
+                    # read, no scan job
+                    try:
+                        n_rows += _pq.read_metadata(full_f).num_rows
+                    except Exception:
+                        pass
+        n_shards = ct.shards or 4
+        # partitioned tables shard PER PARTITION
+        # (partitioned-tables.rst:481-489: count(*) over sys.shards =
+        # live partitions x shards)
+        n_parts = (len(_live_partitions(ct.path)) or 1) if ct.partitioned_by else 1
+        total_shards = n_shards * n_parts
+        base, rem = divmod(n_rows, total_shards)
+        for i in range(total_shards):
+            rows.append(
+                (n, "doc", i % n_shards, True, "STARTED",
+                 size // total_shards, n_files,
+                 base + (1 if i < rem else 0))
+            )
+    return rows
+
+
+def _sys_shards(s) -> list[tuple]:
+    # full SysShardsTableInfo routing columns: never relocating,
+    # routing == lifecycle state, no orphaned partitions on the
+    # parquet store
+    return [r + ("", None, r[4], False) for r in _shard_rows(s)]
+
+
+def _sys_allocations(s) -> list[tuple]:
+    # SysAllocationsTableInfo: one row per shard, mirroring sys.shards
+    # routing on the single node
+    return [
+        (r[1], r[0], None, r[2], "n1", True, "STARTED", None)
+        for r in _shard_rows(s) if r[0]
+    ]
+
+
+def _sys_health(s) -> list[tuple]:
+    # SysHealth (columns in alphabetical order — crate prints SELECT *
+    # alphabetically): every shard is a started primary here, so
+    # always GREEN
+    return [
+        ("GREEN", 0, None, 1, n, s._table_schema.get(n, "doc"), 0)
+        for n in sorted(s.tables)
+    ]
+
+
+def _sys_metrics(s) -> list[tuple]:
+    # SysMetricsTableInfo: per-statement-type latency histogram
+    # aggregated from the jobs log; classification.type is the leading
+    # SQL keyword, as the reference classifies plans
+    import statistics as _stats
+    from collections import defaultdict
+
+    by_type: dict[str, list] = defaultdict(list)
+    for j in s._jobs_log:
+        kind = (j[1].split() or ["UNKNOWN"])[0].upper()
+        dur_ms = (j[4] - j[3]).total_seconds() * 1000.0
+        by_type[kind].append((dur_ms, j[5] is not None))
+    rows = []
+    for kind, vals in sorted(by_type.items()):
+        durs = [v[0] for v in vals]
+        rows.append((
+            len(durs), int(sum(durs)), sum(1 for v in vals if v[1]),
+            float(_stats.mean(durs)),
+            float(_stats.pstdev(durs)) if len(durs) > 1 else 0.0,
+            int(max(durs)), int(min(durs)), "n1", kind,
+        ))
+    return rows
+
+
+def _sys_segments(s) -> list[tuple]:
+    # SysSegmentsTableInfo: the storage-segment analog is one row per
+    # parquet file, with REAL per-file row counts from the parquet
+    # footer (no data scan)
+    import pyarrow.parquet as _pq
+
+    rows = []
+    for n in sorted(s.tables):
+        ct = s._dml.crate_tables.get(n)
+        if ct is None:
+            continue
+        for root, _d, files in os.walk(ct.path):
+            for f in sorted(files):
+                if not f.endswith(".parquet"):
+                    continue
+                p = os.path.join(root, f)
+                try:
+                    num_docs = _pq.ParquetFile(p).metadata.num_rows
+                except Exception:  # noqa: BLE001 - unreadable footer
+                    num_docs = None
+                rows.append(
+                    ("doc", n, None, 0, f, num_docs, 0,
+                     os.path.getsize(p), True, True, True)
+                )
+    return rows
+
+
+def _sys_sessions(s) -> list[tuple]:
+    # SysSessionsTableInfo: this session
+    from datetime import datetime
+
+    last = s._jobs_log[-1] if s._jobs_log else None
+    return [("s1", getattr(s, "auth_user", s.current_user),
+             s.current_user, "n1", "local", datetime.now(), "http", False,
+             last[1] if last else None, last[0] if last else None)]
+
+
+def _sys_summits(s) -> list[tuple]:
+    # SysSummitsTableInfo (mountain/height/prominence/coordinates
+    # geo_point/range/classification/region/country/first_ascent): the
+    # full 1605-row alpine dataset, vendored as a DATA resource
+    # (resources/summits.tsv, see resources/README.md — public
+    # geographic facts, reference SummitsIterable.java loads the same
+    # file)
+    rows = []
+    path = os.path.join(os.path.dirname(__file__), "resources", "summits.tsv")
+    with open(path) as fh:
+        for line in fh:
+            p = line.rstrip("\n").split("\t")
+            pm = re.match(r"POINT\((-?[\d.]+) (-?[\d.]+)\)", p[3])
+            rows.append((
+                p[0],
+                int(p[1]) if p[1] else None,
+                int(p[2]) if p[2] else None,
+                [float(pm.group(1)), float(pm.group(2))] if pm else None,
+                p[4] or None,
+                p[5] or None,
+                p[6] or None,
+                p[7] or None,
+                int(p[8]) if len(p) > 8 and p[8] else None,
+            ))
+    return rows
+
+
+def _pg_class(s) -> list[tuple]:
+    # what psql's \d and ORM introspection join
+    # (PgCatalogTableDefinitions.java PgClassTable/PgAttributeTable).
+    # Relation OIDs are deterministic: 16384 + position in sorted table
+    # order.
+    return [
+        (16384 + i, n, 11, "r", len(s.tables[n].columns))
+        for i, n in enumerate(sorted(s.tables))
+    ]
+
+
+def _pg_attribute(s) -> list[tuple]:
+    return [
+        (16384 + i, f.name, _pg_type_oid(f.dataType), pos, not f.nullable)
+        for i, n in enumerate(sorted(s.tables))
+        for pos, f in enumerate(s.tables[n].schema.fields, start=1)
+    ]
+
+
+def _pg_constraint(s) -> list[tuple]:
+    # PK and CHECK constraints of SQL-created tables, the shape \d+
+    # and ORMs probe
+    rows = []
+    for name, ct in sorted(s._dml.crate_tables.items()):
+        if ct.primary_key:
+            rows.append((f"{name}_pkey", "p", name))
+        rows += [(f"{name}_check_{i}", "c", name) for i in range(len(ct.checks))]
+    return rows
+
+
+def _pg_role_rows(s) -> list[tuple]:
+    """The role store as pg_roles rows; backs pg_roles and pg_user."""
+    return [
+        (r[0], bool(r[1]), True) for r in s.roles.sys_users_rows()
+    ] or [("crate", True, True)]
+
+
+def _pg_publication_tables(s) -> list[tuple]:
+    rows = []
+    for name, p in sorted(s._pub_store.pubs.items() if s._pub_store else ()):
+        tnames = sorted(s._dml.crate_tables) if p["all_tables"] else p["tables"]
+        rows += [(name, "doc", t) for t in tnames]
+    return rows
+
+
+#: pg_type: the reference's full 54-row catalog inventory (PGTypes.java;
+#: listed verbatim in interfaces/postgres.rst) — standard PostgreSQL
+#: catalog facts: oid, typname, typarray (oid of the array type),
+#: typelem (element oid for arrays), typlen (-1 varlena, -2 cstring),
+#: typtype (b base/p pseudo), typcategory (N numeric, S string, A
+#: array, D datetime, ...)
+_PG_TYPE_ROWS = [
+    (16, "bool", 1000, 0, 1, "b", "N"),
+    (18, "char", 1002, 0, 1, "b", "S"),
+    (19, "name", -1, 0, 64, "b", "S"),
+    (20, "int8", 1016, 0, 8, "b", "N"),
+    (21, "int2", 1005, 0, 2, "b", "N"),
+    (23, "int4", 1007, 0, 4, "b", "N"),
+    (24, "regproc", 1008, 0, 4, "b", "N"),
+    (25, "text", 1009, 0, -1, "b", "S"),
+    (26, "oid", 1028, 0, 4, "b", "N"),
+    (30, "oidvector", 1013, 26, -1, "b", "A"),
+    (114, "json", 199, 0, -1, "b", "U"),
+    (199, "_json", 0, 114, -1, "b", "A"),
+    (600, "point", 1017, 0, 16, "b", "G"),
+    (700, "float4", 1021, 0, 4, "b", "N"),
+    (701, "float8", 1022, 0, 8, "b", "N"),
+    (705, "unknown", 0, 0, -2, "p", "X"),
+    (1000, "_bool", 0, 16, -1, "b", "A"),
+    (1002, "_char", 0, 18, -1, "b", "A"),
+    (1005, "_int2", 0, 21, -1, "b", "A"),
+    (1007, "_int4", 0, 23, -1, "b", "A"),
+    (1008, "_regproc", 0, 24, -1, "b", "A"),
+    (1009, "_text", 0, 25, -1, "b", "A"),
+    (1014, "_bpchar", 0, 1042, -1, "b", "A"),
+    (1015, "_varchar", 0, 1043, -1, "b", "A"),
+    (1016, "_int8", 0, 20, -1, "b", "A"),
+    (1017, "_point", 0, 600, -1, "b", "A"),
+    (1021, "_float4", 0, 700, -1, "b", "A"),
+    (1022, "_float8", 0, 701, -1, "b", "A"),
+    (1042, "bpchar", 1014, 0, -1, "b", "S"),
+    (1043, "varchar", 1015, 0, -1, "b", "S"),
+    (1082, "date", 1182, 0, 4, "b", "D"),
+    (1114, "timestamp", 1115, 0, 8, "b", "D"),
+    (1115, "_timestamp", 0, 1114, -1, "b", "A"),
+    (1182, "_date", 0, 1082, -1, "b", "A"),
+    (1184, "timestamptz", 1185, 0, 8, "b", "D"),
+    (1185, "_timestamptz", 0, 1184, -1, "b", "A"),
+    (1186, "interval", 1187, 0, 16, "b", "T"),
+    (1187, "_interval", 0, 1186, -1, "b", "A"),
+    (1231, "_numeric", 0, 1700, -1, "b", "A"),
+    (1266, "timetz", 1270, 0, 12, "b", "D"),
+    (1270, "_timetz", 0, 1266, -1, "b", "A"),
+    (1560, "bit", 1561, 0, -1, "b", "V"),
+    (1561, "_bit", 0, 1560, -1, "b", "A"),
+    (1700, "numeric", 1231, 0, -1, "b", "N"),
+    (2205, "regclass", 2210, 0, 4, "b", "N"),
+    (2206, "regtype", 2211, 0, 4, "b", "N"),
+    (2210, "_regclass", 0, 2205, -1, "b", "A"),
+    (2211, "_regtype", 0, 2206, -1, "b", "A"),
+    (2249, "record", 2287, 0, -1, "p", "P"),
+    (2276, "any", 0, 0, 4, "p", "P"),
+    (2277, "anyarray", 0, 2276, -1, "p", "P"),
+    (2287, "_record", 0, 2249, -1, "p", "A"),
+    (2950, "uuid", 2951, 0, 16, "b", "U"),
+    (2951, "_uuid", 0, 2950, -1, "b", "A"),
+]
+
+#: sys.metrics, also served under the reference's name sys.jobs_metrics
+#: (SysMetricsTableInfo)
+_SYS_METRICS = (
+    "total_count bigint, sum_of_durations bigint, failed_count bigint, "
+    "mean double, stdev double, max bigint, min bigint, "
+    "node_id string, classification string",
+    _sys_metrics,
+)
+
+#: temp-view name -> (DDL, rows builder over the live CrateSession)
+_SYSTEM_VIEWS: dict[str, tuple[str, Callable[[CrateSession], list]]] = {
+    "information_schema_tables": (
+        "table_name string, table_schema string, table_type string, "
+        "number_of_shards int, number_of_replicas string, "
+        "clustered_by string, partitioned_by array<string>, "
+        "settings string, version struct<created:string,upgraded:string>, "
+        "blobs_path string",
+        _information_schema_tables,
+    ),
+    "information_schema_routines": (
+        "routine_name string, routine_type string",
+        _information_schema_routines,
+    ),
+    "information_schema_sql_features": (
+        "feature_id string, feature_name string, sub_feature_id string, "
+        "sub_feature_name string, is_supported string, "
+        "is_verified_by string, comments string",
+        _information_schema_sql_features,
+    ),
+    # single UTF8 row (information-schema.rst:938-944)
+    "information_schema_character_sets": (
+        "character_set_name string, character_repertoire string, "
+        "form_of_use string, character_set_catalog string, "
+        "character_set_schema string, default_collate_name string",
+        lambda s: [("UTF8", "UCS", "UTF8", None, None, None)],
+    ),
+    # single C.utf8 row (information-schema.rst:988-994)
+    "information_schema_collations": (
+        "collation_catalog string, collation_schema string, "
+        "collation_name string, pad_attribute string",
+        lambda s: [("crate", "pg_catalog", "C.utf8", "NO")],
+    ),
+    "information_schema_views": (
+        "table_catalog string, table_schema string, table_name string, "
+        "view_definition string, check_option string, "
+        "is_updatable boolean, owner string",
+        _information_schema_views,
+    ),
+    "information_schema_schemata": (
+        "catalog_name string, schema_name string",
+        _information_schema_schemata,
+    ),
+    "information_schema_table_partitions": (
+        "table_name string, table_schema string, partition_ident string, "
+        "values string, number_of_shards int, number_of_replicas int",
+        _information_schema_table_partitions,
+    ),
+    "information_schema_columns": (
+        "table_name string, table_schema string, column_name string, "
+        "ordinal_position int, data_type string, is_nullable boolean",
+        _information_schema_columns,
+    ),
+    "information_schema_table_constraints": (
+        "constraint_name string, table_name string, table_schema string, "
+        "constraint_type string",
+        _information_schema_table_constraints,
+    ),
+    "information_schema_key_column_usage": (
+        "constraint_name string, table_name string, table_schema string, "
+        "column_name string, ordinal_position int",
+        _information_schema_key_column_usage,
+    ),
+    # fdw/ServersMetadata; PG FDW catalog shape
+    "information_schema_foreign_servers": (
+        "foreign_server_name string, foreign_data_wrapper_name string, "
+        "authorization_identifier string",
+        lambda s: s._fdw_store.foreign_servers_rows() if s._fdw_store else [],
+    ),
+    "information_schema_foreign_tables": (
+        "foreign_table_name string, foreign_table_schema string, "
+        "foreign_server_name string",
+        lambda s: s._fdw_store.foreign_tables_rows() if s._fdw_store else [],
+    ),
+    # single-node analogs (reference SysNodesTableInfo,
+    # SysShardsTableInfo, SysHealth, SysJobsTableInfo, ...)
+    "sys_cluster": (
+        "id string, name string, master_node string, license string, "
+        "version string, parallelism int, settings string",
+        _sys_cluster,
+    ),
+    "sys_tables": (
+        "table_name string, schema_name string",
+        lambda s: [(n, "doc") for n in sorted(s.tables)],
+    ),
+    "sys_nodes": (
+        "id string, name string, hostname string, version string, "
+        "cpus int, port struct<http:int,psql:int,transport:int>",
+        _sys_nodes,
+    ),
+    "sys_shards": (
+        "table_name string, schema_name string, id int, "
+        "primary boolean, state string, size bigint, num_segments int, "
+        "num_docs bigint, partition_ident string, "
+        "relocating_node string, routing_state string, "
+        "orphan_partition boolean",
+        _sys_shards,
+    ),
+    "sys_allocations": (
+        "table_schema string, table_name string, partition_ident string, "
+        "shard_id int, node_id string, primary boolean, "
+        "current_state string, explanation string",
+        _sys_allocations,
+    ),
+    "sys_health": (
+        "health string, missing_shards int, partition_ident string, "
+        "severity int, table_name string, table_schema string, "
+        "underreplicated_shards int",
+        _sys_health,
+    ),
+    "sys_cluster_health": (
+        "description string, health string, missing_shards int, "
+        "pending_tasks int, severity int, underreplicated_shards int",
+        lambda s: [("", "GREEN", 0, 0, 1, 0)],
+    ),
+    # in-flight statements (SysJobsTableInfo): the statement being
+    # executed right now IS a job — the reference's doc examples select
+    # themselves out of sys.jobs
+    "sys_jobs": (
+        "id string, stmt string, username string, started timestamp, "
+        "node struct<id:string,name:string>, session_id int",
+        lambda s: [(j[0], j[1], j[2], j[3], _NODE, 1) for j in s._jobs_stack],
+    ),
+    "sys_jobs_log": (
+        "id string, stmt string, username string, started timestamp, "
+        "ended timestamp, error string",
+        lambda s: list(s._jobs_log),
+    ),
+    # SysOperations(Log)TableInfo: one collect-phase operation per
+    # in-flight job; the log derives one per finished job
+    "sys_operations": (
+        "id string, job_id string, name string, "
+        "node struct<id:string,name:string>, started timestamp, "
+        "used_bytes bigint",
+        lambda s: [
+            (f"op-{j[0]}", j[0], "collect", _NODE, j[3], 0)
+            for j in s._jobs_stack
+        ],
+    ),
+    "sys_operations_log": (
+        "id string, job_id string, name string, started timestamp, "
+        "ended timestamp, used_bytes bigint, error string",
+        lambda s: [
+            (f"op-{j[0]}", j[0], "collect", j[3], j[4], None, j[5])
+            for j in s._jobs_log
+        ],
+    ),
+    "sys_metrics": _SYS_METRICS,
+    "sys_jobs_metrics": _SYS_METRICS,
+    # SysChecksTableInfo / SysNodeChecksTableInfo (severity
+    # 1=LOW..3=HIGH): the reference's registered checks with their
+    # documented descriptions (system-information.rst example output),
+    # all passing; acknowledged is UPDATE-able and transient
+    "sys_checks": (
+        "id int, severity int, description string, passed boolean",
+        lambda s: [
+            (2, 2,
+             "The total number of partitions of one or more partitioned "
+             "tables is approaching the soft limit. Consider reducing "
+             "the partition count.", True),
+            (3, 3,
+             "The following tables need to be recreated for "
+             "compatibility with future major versions of CrateDB: []. "
+             "Use the reindexing procedure to upgrade them.", True),
+        ],
+    ),
+    "sys_node_checks": (
+        "id int, node_id string, severity int, description string, "
+        "passed boolean, acknowledged boolean",
+        lambda s: [
+            (cid, "n1", sev, desc, True, cid in s._node_check_ack)
+            for cid, sev, desc in _NODE_CHECKS
+        ],
+    ),
+    "sys_segments": (
+        "table_schema string, table_name string, partition_ident string, "
+        "shard_id int, segment_name string, num_docs bigint, "
+        "deleted_docs int, size bigint, committed boolean, "
+        "primary boolean, search boolean",
+        _sys_segments,
+    ),
+    "sys_sessions": (
+        "id string, auth_user string, session_user string, "
+        "handler_node string, client_address string, "
+        "time_created timestamp, protocol string, ssl boolean, "
+        "last_statement string, last_job_id string",
+        _sys_sessions,
+    ),
+    # SysSnapshotRestoreTableInfo: populated by RESTORE SNAPSHOT
+    "sys_snapshot_restore": (
+        "id string, repository string, name string, table_schema string, "
+        "table_name string, partition_ident string, shard_id int, "
+        "state string",
+        lambda s: [
+            (str(i), r[0], r[1], "doc", r[2], None, 0, "SUCCESS")
+            for i, r in enumerate(getattr(s, "_restores", []))
+        ],
+    ),
+    "sys_summits": (
+        "mountain string, height int, prominence int, "
+        "coordinates array<double>, range string, "
+        "classification string, region string, country string, "
+        "first_ascent int",
+        _sys_summits,
+    ),
+    # users / roles / privileges (role/metadata/Sys*TableInfo.java) and
+    # repositories / snapshots (metadata/sys/Sys*TableInfo.java)
+    "sys_users": (
+        "name string, superuser boolean, password string, "
+        "granted_roles string, session_settings string",
+        lambda s: s.roles.sys_users_rows(),
+    ),
+    "sys_roles": (
+        "name string, granted_roles string",
+        lambda s: s.roles.sys_roles_rows(),
+    ),
+    "sys_privileges": (
+        "class string, grantee string, grantor string, "
+        "ident string, state string, type string",
+        lambda s: s.roles.sys_privileges_rows(),
+    ),
+    "sys_repositories": (
+        "name string, type string, settings string",
+        lambda s: s.snapshots.sys_repositories_rows(),
+    ),
+    "sys_snapshots": (
+        "id string, name string, repository string, tables array<string>, "
+        "concrete_indices array<string>, "
+        "started string, finished string, version string, state string",
+        lambda s: s.snapshots.sys_snapshots_rows(),
+    ),
+    # pg_catalog for PG-compat tooling (reference
+    # metadata/pgcatalog/PgCatalogTableDefinitions.java lists all of
+    # these): the single-catalog/single-node values, the role store,
+    # open cursors and views
+    "pg_catalog_pg_tables": (
+        "schemaname string, tablename string, tableowner string",
+        lambda s: [("doc", n, "crate") for n in sorted(s.tables)],
+    ),
+    "pg_catalog_pg_namespace": (
+        "oid int, nspname string",
+        lambda s: [
+            (11, "doc"), (12, "information_schema"), (13, "sys"),
+            (14, "pg_catalog"),
+        ],
+    ),
+    "pg_catalog_pg_constraint": (
+        "conname string, contype string, relname string",
+        _pg_constraint,
+    ),
+    "pg_catalog_pg_type": (
+        "oid int, typname string, typarray int, typelem int, "
+        "typlen int, typtype string, typcategory string",
+        lambda s: _PG_TYPE_ROWS,
+    ),
+    "pg_catalog_pg_class": (
+        "oid int, relname string, relnamespace int, relkind string, relnatts int",
+        _pg_class,
+    ),
+    "pg_catalog_pg_attribute": (
+        "attrelid int, attname string, atttypid int, attnum int, attnotnull boolean",
+        _pg_attribute,
+    ),
+    "pg_catalog_pg_proc": (
+        "oid int, proname string, pronamespace int",
+        lambda s: [
+            (2100 + i, name, 11)
+            for i, name in enumerate(
+                ("abs", "avg", "count", "max", "min", "sum", "length",
+                 "substr", "upper", "lower", "coalesce", "now",
+                 "date_trunc", "concat", "round")
+            )
+        ],
+    ),
+    "pg_catalog_pg_database": (
+        "oid int, datname string, encoding int, datallowconn boolean",
+        lambda s: [(0, "crate", 6, True)],
+    ),
+    "pg_catalog_pg_tablespace": (
+        "oid int, spcname string",
+        lambda s: [(0, "pg_default")],
+    ),
+    "pg_catalog_pg_settings": (
+        "name string, setting string",
+        lambda s: [
+            ("search_path", "doc"), ("datestyle", "ISO"), ("timezone", "UTC"),
+            ("server_version", "14.0"), ("server_version_num", "140000"),
+            ("max_index_keys", "32"), ("max_identifier_length", "255"),
+            ("application_name", ""), ("enable_hashjoin", "on"),
+        ],
+    ),
+    "pg_catalog_pg_roles": (
+        "rolname string, rolsuper boolean, rolcanlogin boolean",
+        _pg_role_rows,
+    ),
+    "pg_catalog_pg_user": (
+        "usename string",
+        lambda s: [(r[0],) for r in _pg_role_rows(s)],
+    ),
+    "pg_catalog_pg_cursors": (
+        "name string, schemaname string, statement string",
+        lambda s: [
+            (name, "doc", cur.get("stmt", "")) for name, cur in s._cursors.items()
+        ],
+    ),
+    "pg_catalog_pg_views": (
+        "viewname string, schemaname string, viewowner string",
+        lambda s: [(vn, "doc", "crate") for vn in sorted(s._views)],
+    ),
+    "pg_catalog_pg_indexes": (
+        "indexname string, tablename string, schemaname string",
+        lambda s: [
+            (f"{name}_pkey", name, "doc")
+            for name, ct in sorted(s._dml.crate_tables.items())
+            if ct.primary_key
+        ],
+    ),
+    # metadata/pgcatalog/PgPublicationTableInfo et al.
+    "pg_catalog_pg_publication": (
+        "pubname string, pubowner string, puballtables boolean, "
+        "pubinsert boolean, pubupdate boolean, pubdelete boolean",
+        lambda s: [
+            (name, p["owner"], p["all_tables"], True, True, True)
+            for name, p in sorted(s._pub_store.pubs.items() if s._pub_store else ())
+        ],
+    ),
+    "pg_catalog_pg_publication_tables": (
+        "pubname string, schemaname string, tablename string",
+        _pg_publication_tables,
+    ),
+    "pg_catalog_pg_subscription": (
+        "subname string, subowner string, subenabled boolean, "
+        "subconninfo string, subpublications array<string>",
+        lambda s: [
+            (x.name, "crate", x.enabled, x.connection, [x.publication])
+            for x in sorted(
+                s._sub_store.subs.values() if s._sub_store else (),
+                key=lambda x: x.name,
+            )
+        ],
+    ),
+    # tables the reference itself serves EMPTY, so tooling that probes
+    # them succeeds
+    "pg_catalog_pg_enum": ("oid int, enumtypid int, enumlabel string", _no_rows),
+    "pg_catalog_pg_locks": (
+        "locktype string, relation int, pid int, granted boolean", _no_rows
+    ),
+    "pg_catalog_pg_depend": (
+        "classid int, objid int, refclassid int, refobjid int", _no_rows
+    ),
+    "pg_catalog_pg_matviews": ("schemaname string, matviewname string", _no_rows),
+    "pg_catalog_pg_event_trigger": ("oid int, evtname string", _no_rows),
+    "pg_catalog_pg_range": ("rngtypid int, rngsubtype int", _no_rows),
+    "pg_catalog_pg_shdescription": ("objoid int, description string", _no_rows),
+    "pg_catalog_pg_am": ("oid int, amname string", _no_rows),
+    "pg_catalog_pg_description": (
+        "objoid int, objsubid int, description string", _no_rows
+    ),
+    "pg_catalog_pg_attrdef": ("oid int, adrelid int, adnum int", _no_rows),
+    "pg_catalog_pg_auth_members": ("roleid int, member int", _no_rows),
+    "pg_catalog_pg_index": (
+        "indexrelid int, indrelid int, indisprimary boolean", _no_rows
+    ),
+    "pg_catalog_pg_stats": (
+        "schemaname string, tablename string, attname string, "
+        "null_frac float, n_distinct float",
+        _no_rows,
+    ),
+}
+
+
 class CrateSession:
     """A SQL session over the engine's catalog."""
 
@@ -282,38 +1258,6 @@ class CrateSession:
         #: sys.node_checks ids acknowledged via UPDATE (transient,
         #: like the reference's — lost on restart)
         self._node_check_ack: set[int] = set()
-        #: system-view registration is LAZY: mutations bump a
-        #: generation counter, and the ~65 catalog temp views rebuild
-        #: only when a statement reads them (_ensure_system_views) and
-        #: the registered generation is stale. Each view is a
-        #: local_frame (no Spark job), yet a rebuild still costs ~20 ms
-        #: of py4j round trips per view: ~1.4 s at local[4] on 4 vCPUs.
-        self._sysviews_gen = 1
-        #: monotonic identity token (ADVICE r11: id(self) can be
-        #: reused by CPython after GC, letting a new CrateSession
-        #: collide with a dead one's registration entry and silently
-        #: serve its system views; the counter never repeats)
-        self._sysviews_token = next(CrateSession._SYSVIEWS_TOKENS)
-
-    #: per SparkSession -> (CrateSession token, generation) owning the
-    #: currently-registered system temp views (temp views are global
-    #: to the SparkSession, so another session's registration must
-    #: also invalidate ours). Weak keys: entries die with their
-    #: SparkSession instead of accumulating, and keying on the live
-    #: object rules out id-reuse collisions on the session side too.
-    _SYSVIEWS_STATE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-    _SYSVIEWS_TOKENS = itertools.count(1)
-
-    def _mark_sysviews_dirty(self) -> None:
-        self._sysviews_gen += 1
-
-    def _ensure_system_views(self) -> None:
-        """Rebuild the system temp views iff this session's catalog
-        generation is not the one currently registered on the shared
-        SparkSession."""
-        mine = (self._sysviews_token, self._sysviews_gen)
-        if CrateSession._SYSVIEWS_STATE.get(self.spark) != mine:
-            self._register_system_views()
 
     def _string_object_cols(self) -> set[str]:
         """String-typed columns across the catalog — the engine stores
@@ -430,940 +1374,20 @@ class CrateSession:
     def register(self, name: str, df: DataFrame) -> None:
         df.createOrReplaceTempView(name)
         self.tables[name] = df
-        self._mark_sysviews_dirty()
 
-    def _register_system_views(self) -> None:
-        spark = self.spark
-        crate_tables0 = getattr(self._dml, "crate_tables", {}) if hasattr(self, "_dml") else {}
+    def _ensure_system_views(self, stmt: str) -> None:
+        """Register the system catalog views ``stmt`` names."""
+        names = {
+            f"{m[1]}_{m[2]}".lower() for m in _SYSTEM_VIEW_RE.finditer(stmt)
+        } & _SYSTEM_VIEWS.keys()
+        if names:
+            self._register_system_views(names)
 
-        def _shards_of(n):
-            # the reference's single-node default is 4 shards when
-            # CLUSTERED INTO is not declared (NumberOfShards.java)
-            ct = crate_tables0.get(n)
-            return (ct.shards or 4) if ct is not None else 1
-
-        table_schema = getattr(self, "_table_schema", {})
-        views = getattr(self, "_views", {})
-
-        def _replicas_of(n):
-            # reference default is the '0-1' range (create-table.rst);
-            # replicas is TEXT in the reference schema. Registered
-            # parquet sources report '0' (no replication to configure)
-            ct = crate_tables0.get(n)
-            if ct is None:
-                return "0"
-            return str(ct.settings.get("number_of_replicas", "0-1"))
-
-        def _clustered_by(n):
-            # routing column (information-schema.rst:163-177): the
-            # declared CLUSTERED BY column, '_id' when none, first PK
-            # when only a PK is declared
-            ct = crate_tables0.get(n)
-            if ct is None:
-                return "_id"
-            if ct.clustered_by:
-                return ct.clustered_by[0]
-            return ct.primary_key[0] if ct.primary_key else "_id"
-
-        def _settings_json(n):
-            # nested settings object from the flat dotted keys
-            # (information-schema.rst:238-247; numbers stay numeric)
-            ct = crate_tables0.get(n)
-            if ct is None or not ct.settings:
-                return None
-            import json as _json
-
-            out: dict = {}
-            for k, v in ct.settings.items():
-                node = out
-                parts = k.split(".")
-                for p in parts[:-1]:
-                    node = node.setdefault(p, {})
-                node[parts[-1]] = (
-                    int(v) if isinstance(v, str) and v.lstrip("-").isdigit() else v
-                )
-            return _json.dumps(out)
-
-        #: version['created'] for user tables (reference stamps the
-        #: CrateDB version that created the table; doc reindex example)
-        _tbl_version = ("6.5.0", None)
-        rows = []
-        for name in sorted(self.tables):
-            if name in views:
-                # SQL views list as VIEW with NULL shards/replicas
-                rows.append(
-                    (name, table_schema.get(name, "doc"), "VIEW",
-                     None, None, None, None, None, None)
-                )
-            else:
-                ct = crate_tables0.get(name)
-                rows.append(
-                    (name, table_schema.get(name, "doc"), "BASE TABLE",
-                     _shards_of(name), _replicas_of(name),
-                     _clustered_by(name),
-                     (list(ct.partitioned_by) or None) if ct is not None else None,
-                     _settings_json(name), _tbl_version)
-                )
-        if self._blob_store is not None:
-            rows += [
-                (name, "blob", "BASE TABLE", 1, "0", "digest", None, None,
-                 _tbl_version)
-                for name in sorted(self._blob_store.tables)
-            ]
-        # the reference's fixed catalog inventory
-        # (information-schema.rst:67-156): every system table listed
-        # with NULL shards/replicas
-        for sch, names in _SYSTEM_TABLE_INVENTORY.items():
-            rows += [
-                (t, sch, "BASE TABLE", None, None, None, None, None, None)
-                for t in names
-            ]
-        local_frame(
-            spark, rows,
-            "table_name string, table_schema string, table_type string, "
-            "number_of_shards int, number_of_replicas string, "
-            "clustered_by string, partitioned_by array<string>, "
-            "settings string, version struct<created:string,upgraded:string>",
-        ).withColumn(
-            # blob-storage custom location (blob tables only; always
-            # NULL here — blobs live in the store's own directory)
-            "blobs_path", F.lit(None).cast("string")
-        ).createOrReplaceTempView("information_schema_tables")
-
-        # information_schema.routines (RoutineInfos.java): the Lucene
-        # analysis inventory + custom analyzers + CREATE FUNCTION UDFs
-        routine_rows = [
-            (n, rtype)
-            for rtype, names in _ROUTINE_INVENTORY.items()
-            for n in names
-        ]
-        routine_rows += [(n, "ANALYZER") for n in getattr(self, "_analyzers", {})]
-        routine_rows += [
-            (f"{sch}.{n}", "FUNCTION") for (sch, n) in getattr(self, "_udfs", ())
-        ]
-        local_frame(
-            spark, routine_rows, "routine_name string, routine_type string"
-        ).createOrReplaceTempView("information_schema_routines")
-
-        # information_schema.sql_features: the SQL-standard feature
-        # conformance matrix (resources/sql_features.tsv — data
-        # resource, see resources/README.md; information-schema.rst
-        # sql_features section)
-        if not spark.catalog._jcatalog.tableExists("information_schema_sql_features"):
-            import os as _os
-
-            feat_path = _os.path.join(
-                _os.path.dirname(__file__), "resources", "sql_features.tsv"
-            )
-            feat_rows = []
-            with open(feat_path) as fh:
-                for line in fh:
-                    parts = (line.rstrip("\n").split("\t") + [""] * 7)[:7]
-                    # YES/NO -> TRUE/FALSE (reference renders boolean)
-                    parts[4] = "TRUE" if parts[4] == "YES" else "FALSE"
-                    feat_rows.append(
-                        tuple(parts[:5]) + tuple(p or None for p in parts[5:])
-                    )
-            local_frame(
-                spark, feat_rows,
-                "feature_id string, feature_name string, sub_feature_id string, "
-                "sub_feature_name string, is_supported string, "
-                "is_verified_by string, comments string",
-            ).createOrReplaceTempView("information_schema_sql_features")
-
-        # information_schema.character_sets: single UTF8 row
-        # (information-schema.rst:938-944)
-        local_frame(
-            spark, [("UTF8", "UCS", "UTF8", None, None, None)],
-            "character_set_name string, character_repertoire string, "
-            "form_of_use string, character_set_catalog string, "
-            "character_set_schema string, default_collate_name string",
-        ).createOrReplaceTempView("information_schema_character_sets")
-
-        # information_schema.collations: single C.utf8 row
-        # (information-schema.rst:988-994)
-        local_frame(
-            spark, [("crate", "pg_catalog", "C.utf8", "NO")],
-            "collation_catalog string, collation_schema string, "
-            "collation_name string, pad_attribute string",
-        ).createOrReplaceTempView("information_schema_collations")
-
-        # information_schema.views (information-schema.rst:260-300):
-        # definition is the stored SQL text (the reference re-prints
-        # its AST; we keep the user's text — declared divergence)
-        local_frame(
-            spark,
-            [
-                ("crate", table_schema.get(n, "doc"), n, d, "NONE", False,
-                 self.current_user)
-                for n, d in sorted(views.items())
-            ],
-            "table_catalog string, table_schema string, table_name string, "
-            "view_definition string, check_option string, "
-            "is_updatable boolean, owner string",
-        ).createOrReplaceTempView("information_schema_views")
-
-        # information_schema.schemata (schemata.rst /
-        # InformationSchemataTableInfo): built-ins + implicit schemas
-        # of live tables + explicitly created (possibly empty) schemas
-        schema_names = sorted(
-            {"blob", "doc", "information_schema", "pg_catalog", "sys"}
-            | set(table_schema.values())
-            | getattr(self, "_schemas", set())
-        )
-        local_frame(
-            spark, [("crate", s) for s in schema_names],
-            "catalog_name string, schema_name string",
-        ).createOrReplaceTempView("information_schema_schemata")
-
-        # information_schema.table_partitions (TablePartitionsTableInfo):
-        # one row per live partition of a PARTITIONED BY table, values
-        # read from the partition directory layout
-        import json as _json
-        import os as _os
-
-        part_rows = []
-        for name, ct in sorted(crate_tables0.items()):
-            if not ct.partitioned_by:
-                continue
-            for entry in sorted(_os.listdir(ct.path)):
-                full = _os.path.join(ct.path, entry)
-                if not (_os.path.isdir(full) and "=" in entry):
-                    continue
-                # a partition is live only while it holds data files —
-                # whole-partition DELETE drops the contents
-                # (partitioned-tables.rst:301-318) and may leave the
-                # empty directory behind
-                if not any(
-                    f.endswith(".parquet")
-                    for _r, _d, fs in _os.walk(full)
-                    for f in fs
-                ):
-                    continue
-                # values are typed per the declared partition column
-                # (TablePartitionsTableInfo renders timestamps as epoch
-                # millis, numerics as numbers); dir segments are
-                # URL-encoded by the parquet writer
-                from urllib.parse import unquote
-
-                decl_types = {
-                    c["name"]: c["type"]
-                    for c in getattr(ct, "crate_columns", [])
-                }
-                vals = {}
-                for seg in entry.split("/"):
-                    k, _, v = seg.partition("=")
-                    v = unquote(v)
-                    t = decl_types.get(k, "")
-                    if t.startswith("timestamp") or t == "date":
-                        try:
-                            from datetime import datetime, timezone
-
-                            dt = datetime.fromisoformat(v)
-                            if dt.tzinfo is None:
-                                dt = dt.replace(tzinfo=timezone.utc)
-                            vals[k] = int(dt.timestamp() * 1000)
-                        except ValueError:
-                            vals[k] = v
-                    elif t in ("integer", "bigint", "smallint", "byte"):
-                        try:
-                            vals[k] = int(v)
-                        except ValueError:
-                            vals[k] = v
-                    else:
-                        vals[k] = v
-                part_rows.append(
-                    (name, table_schema.get(name, "doc"), entry,
-                     _json.dumps(vals), _shards_of(name), 0)
-                )
-        local_frame(
-            spark, part_rows,
-            "table_name string, table_schema string, partition_ident string, "
-            "values string, number_of_shards int, number_of_replicas int",
-        ).createOrReplaceTempView("information_schema_table_partitions")
-
-        # information_schema.columns with the reference's shape
-        # (information-schema.rst:363-381): crate data_type names,
-        # object columns expanded into col['sub'] rows — subcolumns
-        # take the ordinals right after their parent, in declaration
-        # order — for SQL-created tables with declared DDL; registered
-        # parquet sources fall back to spark-type-derived names
-        from crate_spark.sql_dml import _spark_to_crate
-
-        col_rows = []
-        for name, df in sorted(self.tables.items()):
-            ct = crate_tables0.get(name)
-            schema_name = table_schema.get(name, "doc")
-            if ct is not None and getattr(ct, "crate_columns", None):
-                pos = 0
-
-                def _emit(decl, prefix=""):
-                    nonlocal pos
-                    pos += 1
-                    path = (
-                        f"{prefix}['{decl['name']}']" if prefix else decl["name"]
-                    )
-                    col_rows.append(
-                        (name, schema_name, path, pos, decl["type"], True)
-                    )
-                    for child in decl.get("children") or []:
-                        _emit(child, path)
-
-                for decl in ct.crate_columns:
-                    _emit(decl)
-            else:
-                for pos, f in enumerate(df.schema.fields, start=1):
-                    col_rows.append(
-                        (
-                            name, schema_name, f.name, pos,
-                            _spark_to_crate(f.dataType.simpleString()),
-                            f.nullable,
-                        )
-                    )
-        # self-description (information-schema.rst:395-447)
-        col_rows += [
-            ("columns", "information_schema", cname, pos, dtype, True)
-            for pos, (cname, dtype) in enumerate(_COLUMNS_SELF_ROWS, start=1)
-        ]
-        # sys.cluster with the full documented settings subscript tree
-        # (system-information.rst:86-215; CrateSettings registry)
-        from crate_spark.cluster_settings import SETTINGS_COLUMNS
-
-        sys_cluster_cols = (
-            [("id", "text"), ("license", "object"),
-             ("master_node", "text"), ("name", "text")]
-            + list(SETTINGS_COLUMNS)
-            + [("state", "text")]
-        )
-        col_rows += [
-            ("cluster", "sys", cname, pos, dtype, True)
-            for pos, (cname, dtype) in enumerate(sys_cluster_cols, start=1)
-        ]
-        local_frame(
-            spark, col_rows,
-            "table_name string, table_schema string, column_name string, "
-            "ordinal_position int, data_type string, is_nullable boolean",
-        ).createOrReplaceTempView("information_schema_columns")
-
-        # information_schema.table_constraints / key_column_usage
-        # (reference InformationSchemaTableDefinitions): PK constraints
-        # of SQL-created tables, what \d and ORMs introspect
-        # PG-style pkey naming; NOT NULL columns surface as CHECK rows
-        # named {schema}_{table}_{col}_not_null; information_schema's
-        # own tables table has a PK (information-schema.rst:600-608)
-        tc_rows = [("tables_pkey", "tables", "information_schema", "PRIMARY KEY")]
-        kcu_rows = []
-        for name, ct in sorted(getattr(self._dml, "crate_tables", {}).items()):
-            sch = table_schema.get(name, "doc")
-            if ct.primary_key:
-                cn = f"{name}_pkey"
-                tc_rows.append((cn, name, sch, "PRIMARY KEY"))
-                for pos, col in enumerate(ct.primary_key, start=1):
-                    kcu_rows.append((cn, name, sch, col, pos))
-            for col in getattr(ct, "not_null", []):
-                tc_rows.append(
-                    (f"{sch}_{name}_{col}_not_null", name, sch, "CHECK")
-                )
-            for i, _chk in enumerate(ct.checks):
-                tc_rows.append((f"{name}_check_{i}", name, sch, "CHECK"))
-        local_frame(
-            spark, tc_rows,
-            "constraint_name string, table_name string, table_schema string, "
-            "constraint_type string",
-        ).createOrReplaceTempView("information_schema_table_constraints")
-        local_frame(
-            spark, kcu_rows,
-            "constraint_name string, table_name string, table_schema string, "
-            "column_name string, ordinal_position int",
-        ).createOrReplaceTempView("information_schema_key_column_usage")
-
-        # sys.cluster with the live settings object: SET GLOBAL
-        # overrides on top of the full documented defaults tree
-        # (cluster_settings.py), rendered as the nested JSON object
-        # settings['stats']['enabled'] subscripts resolve against
-        # (runtime-config.rst, system-information.rst)
-        import json as _json
-
-        nested_settings: dict = {}
-        merged = {
-            **_CLUSTER_SETTING_DEFAULTS,
-            **getattr(self, "_cluster_settings", {}),
-        }
-        for k, v in merged.items():
-            cur = nested_settings
-            parts = k.split(".")
-            for p in parts[:-1]:
-                cur = cur.setdefault(p, {})
-            cur[parts[-1]] = v
-        local_frame(
-            spark,
-            [(
-                "cluster-1", getattr(self, "cluster_name", "crate-spark"),
-                "n1", None, spark.version,
-                spark.sparkContext.defaultParallelism,
-                _json.dumps(nested_settings, sort_keys=True),
-            )],
-            "id string, name string, master_node string, license string, "
-            "version string, parallelism int, settings string",
-        ).createOrReplaceTempView("sys_cluster")
-        local_frame(
-            spark, [(n, "doc") for n in sorted(self.tables)],
-            "table_name string, schema_name string",
-        ).createOrReplaceTempView("sys_tables")
-
-        # sys.nodes / sys.shards / sys.health / sys.jobs — single-node
-        # analogs (reference SysNodesTableInfo, SysShardsTableInfo,
-        # SysHealth, SysJobsTableInfo). One "node" = this Spark driver;
-        # one primary STARTED shard per table; health GREEN (no
-        # replication to degrade); jobs = statements in flight (none:
-        # execute() is synchronous).
-        import socket
-
-        local_frame(
-            spark,
-            [("n1", socket.gethostname(), socket.gethostname(),
-              spark.version, spark.sparkContext.defaultParallelism,
-              {"http": 4200, "psql": 5432, "transport": 4300})],
-            "id string, name string, hostname string, version string, "
-            "cpus int, port struct<http:int,psql:int,transport:int>",
-        ).createOrReplaceTempView("sys_nodes")
-        # sys.shards with REAL storage stats (SysShardsTableInfo: size
-        # in bytes, num file segments): SQL-created tables report their
-        # parquet footprint; one routed shard row per CLUSTERED shard
-        shard_rows = []
-        crate_tables = getattr(self._dml, "crate_tables", {}) if hasattr(self, "_dml") else {}
-        for n in sorted(self.tables):
-            ct = crate_tables.get(n)
-            if ct is not None:
-                import os as _os
-
-                size = n_files = n_rows = 0
-                for root, _d, files in _os.walk(ct.path):
-                    for f in files:
-                        if f.endswith(".parquet"):
-                            n_files += 1
-                            full_f = _os.path.join(root, f)
-                            size += _os.path.getsize(full_f)
-                            # num_docs from the parquet FOOTER — a
-                            # metadata read, no scan job
-                            try:
-                                import pyarrow.parquet as _pq
-
-                                n_rows += _pq.read_metadata(full_f).num_rows
-                            except Exception:
-                                pass
-                n_shards = ct.shards or 4
-                # partitioned tables shard PER PARTITION
-                # (partitioned-tables.rst:481-489: count(*) over
-                # sys.shards = live partitions x shards)
-                n_parts = 1
-                if ct.partitioned_by:
-                    n_parts = sum(
-                        1
-                        for e in _os.listdir(ct.path)
-                        if "=" in e and _os.path.isdir(_os.path.join(ct.path, e))
-                        and any(
-                            f.endswith(".parquet")
-                            for _r, _d2, fs in _os.walk(_os.path.join(ct.path, e))
-                            for f in fs
-                        )
-                    ) or 1
-                total_shards = n_shards * n_parts
-                base, rem = divmod(n_rows, total_shards)
-                for i in range(total_shards):
-                    shard_rows.append(
-                        (n, "doc", i % n_shards, True, "STARTED",
-                         size // total_shards, n_files,
-                         base + (1 if i < rem else 0))
-                    )
-            else:
-                shard_rows.append((n, "doc", 0, True, "STARTED", None, None, None))
-        local_frame(
-            spark,
-            # full SysShardsTableInfo routing columns: never
-            # relocating, routing == lifecycle state, no orphaned
-            # partitions on the parquet store
-            [r + ("", None, r[4], False) for r in shard_rows],
-            "table_name string, schema_name string, id int, "
-            "primary boolean, state string, size bigint, num_segments int, "
-            "num_docs bigint, partition_ident string, "
-            "relocating_node string, routing_state string, "
-            "orphan_partition boolean",
-        ).createOrReplaceTempView("sys_shards")
-        # sys.health / sys.cluster_health (SysHealth; columns in
-        # alphabetical order — crate prints SELECT * alphabetically):
-        # every shard is a started primary here, so always GREEN
-        local_frame(
-            spark,
-            [("GREEN", 0, None, 1, n, table_schema.get(n, "doc"), 0)
-             for n in sorted(self.tables)],
-            "health string, missing_shards int, partition_ident string, "
-            "severity int, table_name string, table_schema string, "
-            "underreplicated_shards int",
-        ).createOrReplaceTempView("sys_health")
-        local_frame(
-            spark, [("", "GREEN", 0, 0, 1, 0)],
-            "description string, health string, missing_shards int, "
-            "pending_tasks int, severity int, underreplicated_shards int",
-        ).createOrReplaceTempView("sys_cluster_health")
-        # in-flight statements (SysJobsTableInfo): the statement being
-        # executed right now IS a job — the reference's doc examples
-        # select themselves out of sys.jobs
-        node_obj = ("n1", "crate")
-        jobs_now = list(getattr(self, "_jobs_stack", []))
-        local_frame(
-            spark, [(j[0], j[1], j[2], j[3], node_obj, 1) for j in jobs_now],
-            "id string, stmt string, username string, started timestamp, "
-            "node struct<id:string,name:string>, session_id int",
-        ).createOrReplaceTempView("sys_jobs")
-        local_frame(
-            spark, list(self._jobs_log),
-            "id string, stmt string, username string, started timestamp, "
-            "ended timestamp, error string",
-        ).createOrReplaceTempView("sys_jobs_log")
-
-        # sys.operations / sys.operations_log (SysOperations(Log)
-        # TableInfo): one collect-phase operation per in-flight job;
-        # the log derives one collect-phase row per finished job
-        op_schema = (
-            "id string, job_id string, name string, started timestamp, "
-            "ended timestamp, used_bytes bigint, error string"
-        )
-        local_frame(
-            spark,
-            [(f"op-{j[0]}", j[0], "collect", node_obj, j[3], 0)
-             for j in jobs_now],
-            "id string, job_id string, name string, "
-            "node struct<id:string,name:string>, started timestamp, "
-            "used_bytes bigint",
-        ).createOrReplaceTempView("sys_operations")
-        local_frame(
-            spark,
-            [(f"op-{j[0]}", j[0], "collect", j[3], j[4], None, j[5])
-             for j in self._jobs_log],
-            op_schema,
-        ).createOrReplaceTempView("sys_operations_log")
-
-        # sys.metrics (SysMetricsTableInfo): per-statement-type latency
-        # histogram aggregated from the jobs log; classification.type
-        # is the leading SQL keyword, as the reference classifies plans
-        from collections import defaultdict
-
-        by_type: dict[str, list] = defaultdict(list)
-        for j in self._jobs_log:
-            kind = (j[1].split() or ["UNKNOWN"])[0].upper()
-            dur_ms = (j[4] - j[3]).total_seconds() * 1000.0
-            by_type[kind].append((dur_ms, j[5] is not None))
-        import statistics as _stats
-
-        metric_rows = []
-        for kind, vals in sorted(by_type.items()):
-            durs = [v[0] for v in vals]
-            metric_rows.append((
-                len(durs), int(sum(durs)), sum(1 for v in vals if v[1]),
-                float(_stats.mean(durs)),
-                float(_stats.pstdev(durs)) if len(durs) > 1 else 0.0,
-                int(max(durs)), int(min(durs)), "n1", kind,
-            ))
-        local_frame(
-            spark, metric_rows,
-            "total_count bigint, sum_of_durations bigint, failed_count bigint, "
-            "mean double, stdev double, max bigint, min bigint, "
-            "node_id string, classification string",
-        ).createOrReplaceTempView("sys_metrics")
-
-        # sys.checks / sys.node_checks (SysChecksTableInfo /
-        # SysNodeChecksTableInfo; severity 1=LOW..3=HIGH): the
-        # reference's registered checks with their documented
-        # descriptions (system-information.rst example output), all
-        # passing; acknowledged is UPDATE-able and transient
-        local_frame(
-            spark,
-            [(2, 2,
-              "The total number of partitions of one or more partitioned "
-              "tables is approaching the soft limit. Consider reducing "
-              "the partition count.", True),
-             (3, 3,
-              "The following tables need to be recreated for "
-              "compatibility with future major versions of CrateDB: []. "
-              "Use the reindexing procedure to upgrade them.", True)],
-            "id int, severity int, description string, passed boolean",
-        ).createOrReplaceTempView("sys_checks")
-        ack = getattr(self, "_node_check_ack", set())
-        local_frame(
-            spark,
-            [(cid, "n1", sev, desc, True, cid in ack)
-             for cid, sev, desc in _NODE_CHECKS],
-            "id int, node_id string, severity int, description string, "
-            "passed boolean, acknowledged boolean",
-        ).createOrReplaceTempView("sys_node_checks")
-
-        # sys.allocations (SysAllocationsTableInfo): one row per shard,
-        # mirroring sys.shards routing on the single node
-        local_frame(
-            spark,
-            [(r[1], r[0], None, r[2], "n1", True, "STARTED", None)
-             for r in shard_rows if r[0]],
-            "table_schema string, table_name string, partition_ident string, "
-            "shard_id int, node_id string, primary boolean, "
-            "current_state string, explanation string",
-        ).createOrReplaceTempView("sys_allocations")
-
-        # sys.segments (SysSegmentsTableInfo): the storage-segment
-        # analog is one row per parquet file, with REAL per-file row
-        # counts from the parquet footer (no data scan)
-        seg_rows = []
-        for n in sorted(self.tables):
-            ct = crate_tables.get(n)
-            if ct is None:
-                continue
-            import os as _os
-
-            import pyarrow.parquet as _pq
-
-            for root, _d, files in _os.walk(ct.path):
-                for f in sorted(files):
-                    if not f.endswith(".parquet"):
-                        continue
-                    p = _os.path.join(root, f)
-                    try:
-                        num_docs = _pq.ParquetFile(p).metadata.num_rows
-                    except Exception:  # noqa: BLE001 - unreadable footer
-                        num_docs = None
-                    seg_rows.append(
-                        ("doc", n, None, 0, f, num_docs, 0,
-                         _os.path.getsize(p), True, True, True)
-                    )
-        local_frame(
-            spark, seg_rows,
-            "table_schema string, table_name string, partition_ident string, "
-            "shard_id int, segment_name string, num_docs bigint, "
-            "deleted_docs int, size bigint, committed boolean, "
-            "primary boolean, search boolean",
-        ).createOrReplaceTempView("sys_segments")
-
-        # sys.sessions (SysSessionsTableInfo): this session
-        from datetime import datetime as _dt
-
-        last = self._jobs_log[-1] if self._jobs_log else None
-        local_frame(
-            spark,
-            [("s1", getattr(self, "auth_user", self.current_user),
-              self.current_user, "n1", "local", _dt.now(), "http", False,
-              last[1] if last else None, last[0] if last else None)],
-            "id string, auth_user string, session_user string, "
-            "handler_node string, client_address string, "
-            "time_created timestamp, protocol string, ssl boolean, "
-            "last_statement string, last_job_id string",
-        ).createOrReplaceTempView("sys_sessions")
-
-        # sys.snapshot_restore (SysSnapshotRestoreTableInfo): populated
-        # by RESTORE SNAPSHOT; empty otherwise
-        local_frame(
-            spark,
-            [(str(i), s[0], s[1], "doc", s[2], None, 0, "SUCCESS")
-             for i, s in enumerate(getattr(self, "_restores", []))],
-            "id string, repository string, name string, table_schema string, "
-            "table_name string, partition_ident string, shard_id int, "
-            "state string",
-        ).createOrReplaceTempView("sys_snapshot_restore")
-
-        # sys.summits (SysSummitsTableInfo: mountain/height/prominence/
-        # coordinates geo_point/range/classification/region/country/
-        # first_ascent): the full 1605-row alpine dataset, vendored as
-        # a DATA resource (resources/summits.tsv, see resources/
-        # README.md — public geographic facts, reference
-        # SummitsIterable.java loads the same file). Registered once
-        # per spark session (static data).
-        if not spark.catalog._jcatalog.tableExists("sys_summits"):
-            import os as _os2
-            import re as _re2
-
-            srows = []
-            with open(
-                _os2.path.join(
-                    _os2.path.dirname(__file__), "resources", "summits.tsv"
-                )
-            ) as fh:
-                for line in fh:
-                    p = line.rstrip("\n").split("\t")
-                    pm = _re2.match(
-                        r"POINT\((-?[\d.]+) (-?[\d.]+)\)", p[3]
-                    )
-                    srows.append((
-                        p[0],
-                        int(p[1]) if p[1] else None,
-                        int(p[2]) if p[2] else None,
-                        [float(pm.group(1)), float(pm.group(2))] if pm else None,
-                        p[4] or None,
-                        p[5] or None,
-                        p[6] or None,
-                        p[7] or None,
-                        int(p[8]) if len(p) > 8 and p[8] else None,
-                    ))
-            local_frame(
-                spark, srows,
-                "mountain string, height int, prominence int, "
-                "coordinates array<double>, range string, "
-                "classification string, region string, country string, "
-                "first_ascent int",
-            ).createOrReplaceTempView("sys_summits")
-
-        # pg_catalog minimum for PG-compat tooling (reference
-        # metadata/pgcatalog/PgCatalogTableDefinitions.java): pg_tables,
-        # pg_namespace, pg_type — queryable as pg_catalog.X via the shim.
-        local_frame(
-            spark, [("doc", n, "crate") for n in sorted(self.tables)],
-            "schemaname string, tablename string, tableowner string",
-        ).createOrReplaceTempView("pg_catalog_pg_tables")
-        local_frame(
-            spark,
-            [(11, "doc"), (12, "information_schema"), (13, "sys"), (14, "pg_catalog")],
-            "oid int, nspname string",
-        ).createOrReplaceTempView("pg_catalog_pg_namespace")
-        # pg_constraint (PgCatalogTableDefinitions): PK constraints of
-        # SQL-created tables, the shape \d+ and ORMs probe
-        con_rows = []
-        for name, ct in sorted(getattr(self._dml, "crate_tables", {}).items()):
-            if ct.primary_key:
-                con_rows.append((f"{name}_pkey", "p", name))
-            for i, _chk in enumerate(ct.checks):
-                con_rows.append((f"{name}_check_{i}", "c", name))
-        local_frame(
-            spark, con_rows,
-            "conname string, contype string, relname string",
-        ).createOrReplaceTempView("pg_catalog_pg_constraint")
-
-        # pg_type: the reference's full 54-row catalog inventory
-        # (PGTypes.java; listed verbatim in interfaces/postgres.rst) —
-        # standard PostgreSQL catalog facts: oid, typname, typarray
-        # (oid of the array type), typelem (element oid for arrays),
-        # typlen (-1 varlena, -2 cstring), typtype (b base/p pseudo),
-        # typcategory (N numeric, S string, A array, D datetime, ...)
-        local_frame(
-            spark,
-            [
-                (16, "bool", 1000, 0, 1, "b", "N"),
-                (18, "char", 1002, 0, 1, "b", "S"),
-                (19, "name", -1, 0, 64, "b", "S"),
-                (20, "int8", 1016, 0, 8, "b", "N"),
-                (21, "int2", 1005, 0, 2, "b", "N"),
-                (23, "int4", 1007, 0, 4, "b", "N"),
-                (24, "regproc", 1008, 0, 4, "b", "N"),
-                (25, "text", 1009, 0, -1, "b", "S"),
-                (26, "oid", 1028, 0, 4, "b", "N"),
-                (30, "oidvector", 1013, 26, -1, "b", "A"),
-                (114, "json", 199, 0, -1, "b", "U"),
-                (199, "_json", 0, 114, -1, "b", "A"),
-                (600, "point", 1017, 0, 16, "b", "G"),
-                (700, "float4", 1021, 0, 4, "b", "N"),
-                (701, "float8", 1022, 0, 8, "b", "N"),
-                (705, "unknown", 0, 0, -2, "p", "X"),
-                (1000, "_bool", 0, 16, -1, "b", "A"),
-                (1002, "_char", 0, 18, -1, "b", "A"),
-                (1005, "_int2", 0, 21, -1, "b", "A"),
-                (1007, "_int4", 0, 23, -1, "b", "A"),
-                (1008, "_regproc", 0, 24, -1, "b", "A"),
-                (1009, "_text", 0, 25, -1, "b", "A"),
-                (1014, "_bpchar", 0, 1042, -1, "b", "A"),
-                (1015, "_varchar", 0, 1043, -1, "b", "A"),
-                (1016, "_int8", 0, 20, -1, "b", "A"),
-                (1017, "_point", 0, 600, -1, "b", "A"),
-                (1021, "_float4", 0, 700, -1, "b", "A"),
-                (1022, "_float8", 0, 701, -1, "b", "A"),
-                (1042, "bpchar", 1014, 0, -1, "b", "S"),
-                (1043, "varchar", 1015, 0, -1, "b", "S"),
-                (1082, "date", 1182, 0, 4, "b", "D"),
-                (1114, "timestamp", 1115, 0, 8, "b", "D"),
-                (1115, "_timestamp", 0, 1114, -1, "b", "A"),
-                (1182, "_date", 0, 1082, -1, "b", "A"),
-                (1184, "timestamptz", 1185, 0, 8, "b", "D"),
-                (1185, "_timestamptz", 0, 1184, -1, "b", "A"),
-                (1186, "interval", 1187, 0, 16, "b", "T"),
-                (1187, "_interval", 0, 1186, -1, "b", "A"),
-                (1231, "_numeric", 0, 1700, -1, "b", "A"),
-                (1266, "timetz", 1270, 0, 12, "b", "D"),
-                (1270, "_timetz", 0, 1266, -1, "b", "A"),
-                (1560, "bit", 1561, 0, -1, "b", "V"),
-                (1561, "_bit", 0, 1560, -1, "b", "A"),
-                (1700, "numeric", 1231, 0, -1, "b", "N"),
-                (2205, "regclass", 2210, 0, 4, "b", "N"),
-                (2206, "regtype", 2211, 0, 4, "b", "N"),
-                (2210, "_regclass", 0, 2205, -1, "b", "A"),
-                (2211, "_regtype", 0, 2206, -1, "b", "A"),
-                (2249, "record", 2287, 0, -1, "p", "P"),
-                (2276, "any", 0, 0, 4, "p", "P"),
-                (2277, "anyarray", 0, 2276, -1, "p", "P"),
-                (2287, "_record", 0, 2249, -1, "p", "A"),
-                (2950, "uuid", 2951, 0, 16, "b", "U"),
-                (2951, "_uuid", 0, 2950, -1, "b", "A"),
-            ],
-            "oid int, typname string, typarray int, typelem int, "
-            "typlen int, typtype string, typcategory string",
-        ).createOrReplaceTempView("pg_catalog_pg_type")
-
-        # pg_class / pg_attribute / pg_proc — what psql's \d and ORM
-        # introspection actually join (PgCatalogTableDefinitions.java
-        # PgClassTable/PgAttributeTable/PgProcTable). Relation OIDs are
-        # deterministic: 16384 + position in sorted table order.
-        cls_rows = [
-            (16384 + i, n, 11, "r", len(self.tables[n].columns))
-            for i, n in enumerate(sorted(self.tables))
-        ]
-        local_frame(
-            spark, cls_rows,
-            "oid int, relname string, relnamespace int, relkind string, relnatts int",
-        ).createOrReplaceTempView("pg_catalog_pg_class")
-        att_rows = []
-        for i, n in enumerate(sorted(self.tables)):
-            for pos, f in enumerate(self.tables[n].schema.fields, start=1):
-                att_rows.append(
-                    (16384 + i, f.name, _pg_type_oid(f.dataType), pos, not f.nullable)
-                )
-        local_frame(
-            spark, att_rows,
-            "attrelid int, attname string, atttypid int, attnum int, attnotnull boolean",
-        ).createOrReplaceTempView("pg_catalog_pg_attribute")
-        local_frame(
-            spark,
-            [
-                (2100 + i, name, 11)
-                for i, name in enumerate(
-                    ("abs", "avg", "count", "max", "min", "sum", "length",
-                     "substr", "upper", "lower", "coalesce", "now",
-                     "date_trunc", "concat", "round")
-                )
-            ],
-            "oid int, proname string, pronamespace int",
-        ).createOrReplaceTempView("pg_catalog_pg_proc")
-
-        # pg_catalog breadth (PgCatalogTableDefinitions.java lists all
-        # of these): the single-catalog/single-node values, the role
-        # store, open cursors, and views — plus the tables the
-        # reference itself serves EMPTY (pg_enum, pg_locks, pg_depend,
-        # pg_matviews, pg_event_trigger, pg_range, pg_shdescription,
-        # pg_am, pg_description) so tooling that probes them succeeds.
-        local_frame(
-            spark, [(0, "crate", 6, True)],
-            "oid int, datname string, encoding int, datallowconn boolean",
-        ).createOrReplaceTempView("pg_catalog_pg_database")
-        local_frame(
-            spark, [(0, "pg_default")], "oid int, spcname string",
-        ).createOrReplaceTempView("pg_catalog_pg_tablespace")
-        setting_rows = [
-            ("search_path", "doc"), ("datestyle", "ISO"), ("timezone", "UTC"),
-            ("server_version", "14.0"), ("server_version_num", "140000"),
-            ("max_index_keys", "32"), ("max_identifier_length", "255"),
-            ("application_name", ""), ("enable_hashjoin", "on"),
-        ]
-        local_frame(
-            spark, setting_rows, "name string, setting string",
-        ).createOrReplaceTempView("pg_catalog_pg_settings")
-        role_rows = [
-            (r[0], bool(r[1]), True) for r in self.roles.sys_users_rows()
-        ] or [("crate", True, True)]
-        local_frame(
-            spark, role_rows, "rolname string, rolsuper boolean, rolcanlogin boolean",
-        ).createOrReplaceTempView("pg_catalog_pg_roles")
-        local_frame(
-            spark, [(r[0],) for r in role_rows], "usename string",
-        ).createOrReplaceTempView("pg_catalog_pg_user")
-        local_frame(
-            spark,
-            [(name, "doc", cur.get("stmt", ""))
-             for name, cur in self._cursors.items()],
-            "name string, schemaname string, statement string",
-        ).createOrReplaceTempView("pg_catalog_pg_cursors")
-        view_rows = [
-            (vn, "doc", "crate") for vn in sorted(getattr(self, "_views", {}))
-        ]
-        local_frame(
-            spark, view_rows,
-            "viewname string, schemaname string, viewowner string",
-        ).createOrReplaceTempView("pg_catalog_pg_views")
-        idx_rows = [
-            (f"{name}_pkey", name, "doc")
-            for name, ct in sorted(getattr(self._dml, "crate_tables", {}).items())
-            if ct.primary_key
-        ]
-        local_frame(
-            spark, idx_rows,
-            "indexname string, tablename string, schemaname string",
-        ).createOrReplaceTempView("pg_catalog_pg_indexes")
-        for empty_name, empty_schema in (
-            ("pg_enum", "oid int, enumtypid int, enumlabel string"),
-            ("pg_locks", "locktype string, relation int, pid int, granted boolean"),
-            ("pg_depend", "classid int, objid int, refclassid int, refobjid int"),
-            ("pg_matviews", "schemaname string, matviewname string"),
-            ("pg_event_trigger", "oid int, evtname string"),
-            ("pg_range", "rngtypid int, rngsubtype int"),
-            ("pg_shdescription", "objoid int, description string"),
-            ("pg_am", "oid int, amname string"),
-            ("pg_description", "objoid int, objsubid int, description string"),
-            ("pg_attrdef", "oid int, adrelid int, adnum int"),
-            ("pg_auth_members", "roleid int, member int"),
-            ("pg_index", "indexrelid int, indrelid int, indisprimary boolean"),
-            ("pg_stats", "schemaname string, tablename string, attname string, "
-             "null_frac float, n_distinct float"),
-        ):
-            local_frame(spark, [], empty_schema).createOrReplaceTempView(
-                f"pg_catalog_{empty_name}"
-            )
-        self._register_admin_views()
-        # information_schema.foreign_servers / foreign_tables
-        # (fdw/ServersMetadata; PG FDW catalog shape)
-        fdw_servers = (
-            self._fdw_store.foreign_servers_rows() if self._fdw_store else []
-        )
-        local_frame(
-            spark, fdw_servers,
-            "foreign_server_name string, foreign_data_wrapper_name string, "
-            "authorization_identifier string",
-        ).createOrReplaceTempView("information_schema_foreign_servers")
-        fdw_tables = self._fdw_store.foreign_tables_rows() if self._fdw_store else []
-        local_frame(
-            spark, fdw_tables,
-            "foreign_table_name string, foreign_table_schema string, "
-            "foreign_server_name string",
-        ).createOrReplaceTempView("information_schema_foreign_tables")
-        # pg_publication / pg_publication_tables / pg_subscription
-        # (metadata/pgcatalog/PgPublicationTableInfo et al.)
-        pubs = self._pub_store.pubs if self._pub_store else {}
-        local_frame(
-            spark,
-            [
-                (name, p["owner"], p["all_tables"], True, True, True)
-                for name, p in sorted(pubs.items())
-            ],
-            "pubname string, pubowner string, puballtables boolean, "
-            "pubinsert boolean, pubupdate boolean, pubdelete boolean",
-        ).createOrReplaceTempView("pg_catalog_pg_publication")
-        pub_tables = []
-        for name, p in sorted(pubs.items()):
-            tnames = (
-                sorted(self._dml.crate_tables) if p["all_tables"] else p["tables"]
-            )
-            pub_tables += [(name, "doc", t) for t in tnames]
-        local_frame(
-            spark, pub_tables,
-            "pubname string, schemaname string, tablename string",
-        ).createOrReplaceTempView("pg_catalog_pg_publication_tables")
-        subs = self._sub_store.subs if self._sub_store else {}
-        local_frame(
-            spark,
-            [
-                (s.name, "crate", s.enabled, s.connection, [s.publication])
-                for s in sorted(subs.values(), key=lambda x: x.name)
-            ],
-            "subname string, subowner string, subenabled boolean, "
-            "subconninfo string, subpublications array<string>",
-        ).createOrReplaceTempView("pg_catalog_pg_subscription")
-        # record who registered, at which catalog generation — the
-        # _ensure_system_views read gate compares against this
-        CrateSession._SYSVIEWS_STATE[spark] = (
-            getattr(self, "_sysviews_token", 0),
-            getattr(self, "_sysviews_gen", 0),
-        )
+    def _register_system_views(self, names) -> None:
+        """Build each named view from this session's live state."""
+        for name in sorted(names):
+            ddl, rows = _SYSTEM_VIEWS[name]
+            local_frame(self.spark, rows(self), ddl).createOrReplaceTempView(name)
 
     @property
     def publications(self):
@@ -1422,37 +1446,6 @@ class CrateSession:
 
     def delete_blob(self, table: str, digest: str) -> bool:
         return self.blobs.get(table).delete(digest)
-
-    def _register_admin_views(self) -> None:
-        """sys.users / sys.roles / sys.privileges
-        (role/metadata/Sys*TableInfo.java) and sys.repositories /
-        sys.snapshots (metadata/sys/Sys*TableInfo.java) as temp views.
-        Tiny catalog rows — rebuilt on every admin mutation."""
-        spark = self.spark
-        local_frame(
-            spark, self.roles.sys_users_rows(),
-            "name string, superuser boolean, password string, "
-            "granted_roles string, session_settings string",
-        ).createOrReplaceTempView("sys_users")
-        local_frame(
-            spark, self.roles.sys_roles_rows(),
-            "name string, granted_roles string",
-        ).createOrReplaceTempView("sys_roles")
-        local_frame(
-            spark, self.roles.sys_privileges_rows(),
-            "class string, grantee string, grantor string, "
-            "ident string, state string, type string",
-        ).createOrReplaceTempView("sys_privileges")
-        local_frame(
-            spark, self.snapshots.sys_repositories_rows(),
-            "name string, type string, settings string",
-        ).createOrReplaceTempView("sys_repositories")
-        local_frame(
-            spark, self.snapshots.sys_snapshots_rows(),
-            "id string, name string, repository string, tables array<string>, "
-            "concrete_indices array<string>, "
-            "started string, finished string, version string, state string",
-        ).createOrReplaceTempView("sys_snapshots")
 
     # -- statements ------------------------------------------------------
     def execute(self, sql: str, params: list | None = None) -> DataFrame:
@@ -1641,26 +1634,7 @@ class CrateSession:
     def _dispatch(self, stmt: str) -> DataFrame:
         upper = stmt.upper()
 
-        # Every statement changes runtime-backed system state (the
-        # sys.jobs stack / jobs_log ring were pushed by execute();
-        # SET/cursor statements mutate pg_settings/pg_cursors), so the
-        # catalog generation advances per statement...
-        self._mark_sysviews_dirty()
-        # ...but temp views REBUILD lazily: only when a statement
-        # might actually read them — dotted (sys.jobs) or bare PG
-        # spellings (pg_type) both count. Statements that never touch
-        # the catalog (the common DDL/DML path) skip the ~65-view
-        # rebuild entirely.
-        # Temp views are global to the SparkSession; the generation
-        # state also invalidates when ANOTHER CrateSession registered
-        # last, so each session still sees its own catalog.
-        if re.search(
-            r"\b(information_schema|sys|pg_catalog)\s*\.|\bpg_\w+"
-            r"|\b(sys|information_schema)_\w+",
-            stmt,
-            re.IGNORECASE,
-        ):
-            self._ensure_system_views()
+        self._ensure_system_views(stmt)
         if re.search(r"\bblob\s*\.", stmt, re.IGNORECASE):
             self._register_blob_views()
 
@@ -1686,7 +1660,6 @@ class CrateSession:
             for cid in ids:
                 (self._node_check_ack.add if flag
                  else self._node_check_ack.discard)(cid)
-            self._mark_sysviews_dirty()
             return local_frame(
                 self.spark, [(len(ids),)], "rowcount bigint"
             )
@@ -1802,7 +1775,6 @@ class CrateSession:
                     return local_frame(self.spark, [(0,)], "rowcount bigint")
                 raise ValueError(f"Schema '{name}' already exists")
             self._schemas.add(name)
-            self._mark_sysviews_dirty()
             return local_frame(self.spark, [(1,)], "rowcount bigint")
 
         # DROP SCHEMA [IF EXISTS] name [, ...] [CASCADE|RESTRICT]
@@ -1839,7 +1811,6 @@ class CrateSession:
                     self._dml._drop_table(f'DROP TABLE "{t}"')
                 self._schemas.discard(name)
                 n_dropped += 1
-            self._mark_sysviews_dirty()
             return local_frame(self.spark, [(n_dropped,)], "rowcount bigint")
 
         if upper.startswith("EXPLAIN"):
@@ -1872,7 +1843,6 @@ class CrateSession:
                 self._cluster_settings[key] = val
                 # JSON spelling in the conf: booleans stay lowercase
                 self.spark.conf.set(key, _json.dumps(val) if isinstance(val, bool) else str(val))
-            self._mark_sysviews_dirty()
             return local_frame(
                 self.spark,
                 [(k, _json.dumps(v) if isinstance(v, bool) else str(v)) for k, v in pairs],
@@ -1890,7 +1860,6 @@ class CrateSession:
                     self.spark.conf.unset(key)
                 except Exception:  # noqa: BLE001 - never-set key
                     pass
-            self._mark_sysviews_dirty()
             return local_frame(
                 self.spark, [(k,) for k in keys], "setting string"
             )
@@ -1983,21 +1952,21 @@ class CrateSession:
         # information_schema queries — same trick here)
         m = re.match(r"SHOW\s+(TABLES|SCHEMAS|COLUMNS\s+(?:FROM|IN)\s+(\w+))\s*$", stmt, re.IGNORECASE)
         if m:
-            self._ensure_system_views()
             what = m.group(1).upper()
             if what == "TABLES":
-                return self.spark.sql(
-                    "SELECT table_name FROM information_schema_tables ORDER BY table_name"
-                )
-            if what == "SCHEMAS":
-                return self.spark.sql(
+                sql = "SELECT table_name FROM information_schema_tables ORDER BY table_name"
+            elif what == "SCHEMAS":
+                sql = (
                     "SELECT schema_name FROM information_schema_schemata "
                     "ORDER BY schema_name"
                 )
-            return self.spark.sql(
-                f"SELECT column_name, data_type FROM information_schema_columns "
-                f"WHERE table_name = '{m.group(2)}' ORDER BY ordinal_position"
-            )
+            else:
+                sql = (
+                    f"SELECT column_name, data_type FROM information_schema_columns "
+                    f"WHERE table_name = '{m.group(2)}' ORDER BY ordinal_position"
+                )
+            self._ensure_system_views(sql)
+            return self.spark.sql(sql)
         # PG-compat: the engine is autocommit, the reported isolation
         # level is fixed (interfaces/postgres.rst)
         if re.match(
@@ -2140,7 +2109,6 @@ class CrateSession:
             self.spark.catalog.dropTempView(name)
             self.tables.pop(name, None)
             self._views.pop(name, None)
-            self._mark_sysviews_dirty()
             return local_frame(self.spark, [(name,)], "dropped string")
 
         # Cursors (reference session/Cursor.java): DECLARE / FETCH /
@@ -2860,8 +2828,6 @@ class CrateSession:
             # object representation); a JS UDF's declared-object param
             # must see the OBJECT, not its encoding, for property
             # access / destructuring (GraalVM host access gets a map)
-            import json as _json
-
             if isinstance(x, str):
                 try:
                     v = _json.loads(x)
@@ -2951,7 +2917,6 @@ class CrateSession:
             "seq": self._udf_seq,
         }
         self._register_udf_dispatch(schema, name.strip('`"').lower())
-        self._mark_sysviews_dirty()
         return local_frame(
             self.spark,
             [(f"{schema}.{name}", ret_type)], "function string, returns string"
@@ -3053,7 +3018,6 @@ class CrateSession:
                     self._udf_spark_name(schema, name.lower())
                 )
             )
-        self._mark_sysviews_dirty()
         return local_frame(self.spark, [(qname,)], "dropped string")
 
     def _explain_analyze(self, body: str) -> DataFrame:
@@ -3697,14 +3661,10 @@ class _JsJSON:
 
     @staticmethod
     def parse(s):
-        import json as _json
-
         return _js_wrap_value(_json.loads(s))
 
     @staticmethod
     def stringify(v, *_):
-        import json as _json
-
         return _json.dumps(_js_unwrap(v))
 
 

@@ -961,8 +961,7 @@ class SqlDmlRouter:
         self.owner.tables.pop(name, None)
         # implicit schemas vanish with their last object
         # (create-schema.rst) — schemata recomputes from this map
-        getattr(self.owner, "_table_schema", {}).pop(name, None)
-        self.owner._mark_sysviews_dirty()
+        self.owner._table_schema.pop(name, None)
         return self._count_df(1)
 
     # -- INSERT ----------------------------------------------------------

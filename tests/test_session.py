@@ -1745,3 +1745,237 @@ def test_order_by_alias_qualifier_survives_schema_strip(spark, tmp_path):
         "SELECT zx.a, zx.b FROM plain AS zx, zx.t ORDER BY zx.a, zx.b"
     ).collect()
     assert [tuple(r) for r in rows] == [(1, 2), (2, 1)]
+
+
+# -- system catalog: per-statement views ---------------------------------------
+
+
+def test_sessions_on_one_spark_session_keep_their_own_catalog(spark, tmp_path):
+    """Temp views are global to the SparkSession; each session's read
+    still lists its own tables and never the other's."""
+    a = CrateSession(spark, storage_dir=str(tmp_path / "a"))
+    b = CrateSession(spark, storage_dir=str(tmp_path / "b"))
+    q = "SELECT table_name FROM information_schema.tables WHERE table_schema = 'doc'"
+
+    def names(s):
+        return {r[0] for r in s.execute(q).collect()}
+
+    a.execute("CREATE TABLE iso_a1 (x INTEGER)")
+    b.execute("CREATE TABLE iso_b1 (x INTEGER)")
+    assert names(a) == {"iso_a1"}
+    assert names(b) == {"iso_b1"}
+    a.execute("CREATE TABLE iso_a2 (x INTEGER)")
+    assert names(b) == {"iso_b1"}
+    assert names(a) == {"iso_a1", "iso_a2"}
+    b.execute("DROP TABLE iso_b1")
+    assert names(a) == {"iso_a1", "iso_a2"}
+    assert names(b) == set()
+
+
+#: case -> (setup, mutation, read, predicate on the read's rows,
+#: cleanup): the predicate must fail before the mutation and hold
+#: after it
+_FRESHNESS_CASES = {
+    "create_schema": (
+        [], ["CREATE SCHEMA fresh_s"],
+        "SELECT schema_name FROM information_schema.schemata",
+        lambda rows: ("fresh_s",) in rows, [],
+    ),
+    "set_global": (
+        [], ["SET GLOBAL TRANSIENT stats.jobs_log_size = 77"],
+        "SELECT settings['stats']['jobs_log_size'] FROM sys.cluster",
+        lambda rows: str(rows[0][0]) == "77",
+        ["RESET GLOBAL stats.jobs_log_size"],
+    ),
+    "ack_node_check": (
+        [], ["UPDATE sys.node_checks SET acknowledged = true WHERE id = 1"],
+        "SELECT acknowledged FROM sys.node_checks WHERE id = 1",
+        lambda rows: rows == [(True,)], [],
+    ),
+    "create_user": (
+        [], ["CREATE USER fresh_u"],
+        "SELECT name FROM sys.users",
+        lambda rows: ("fresh_u",) in rows, [],
+    ),
+    "grant": (
+        ["CREATE USER fresh_g"], ["GRANT DQL TO fresh_g"],
+        "SELECT grantee FROM sys.privileges",
+        lambda rows: ("fresh_g",) in rows, [],
+    ),
+    "declare": (
+        ["CREATE TABLE fresh_t (a INTEGER)"],
+        ["DECLARE fresh_c NO SCROLL CURSOR FOR SELECT a FROM fresh_t"],
+        "SELECT name FROM pg_catalog.pg_cursors",
+        lambda rows: ("fresh_c",) in rows, ["CLOSE fresh_c"],
+    ),
+    "create_view": (
+        ["CREATE TABLE fresh_t (a INTEGER)"],
+        ["CREATE VIEW fresh_v AS SELECT a FROM fresh_t"],
+        "SELECT table_name FROM information_schema.views",
+        lambda rows: ("fresh_v",) in rows, [],
+    ),
+    "insert_refresh": (
+        ["CREATE TABLE fresh_t (a INTEGER)"],
+        ["INSERT INTO fresh_t (a) VALUES (1), (2), (3)", "REFRESH TABLE fresh_t"],
+        "SELECT sum(num_docs) FROM sys.shards WHERE table_name = 'fresh_t'",
+        lambda rows: rows == [(3,)], [],
+    ),
+    "any_statement": (
+        [], ["SELECT 42 AS fresh_marker"],
+        "SELECT count(*) FROM sys.jobs_log "
+        "WHERE stmt = 'SELECT 42 AS fresh_marker'",
+        lambda rows: rows == [(1,)], [],
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_FRESHNESS_CASES))
+def test_catalog_read_sees_the_mutation_before_it(spark, tmp_path, case):
+    """Each read is built from live session state: a view registered
+    before the mutation is never served stale after it."""
+    setup, mutation, read, holds, cleanup = _FRESHNESS_CASES[case]
+    s = CrateSession(spark, storage_dir=str(tmp_path))
+    for stmt in setup:
+        s.execute(stmt).collect()
+
+    def rows():
+        return [tuple(r) for r in s.execute(read).collect()]
+
+    try:
+        assert not holds(rows())
+        for stmt in mutation:
+            s.execute(stmt).collect()
+        assert holds(rows())
+    finally:
+        for stmt in cleanup:
+            s.execute(stmt).collect()
+
+
+def _views_registered(session, monkeypatch, stmt) -> list[str]:
+    frame = type(session.spark.range(0))
+    real = frame.createOrReplaceTempView
+    names: list[str] = []
+
+    def counting(df, name):
+        names.append(name)
+        return real(df, name)
+
+    with monkeypatch.context() as m:
+        m.setattr(frame, "createOrReplaceTempView", counting)
+        session.execute(stmt).collect()
+    return names
+
+
+def test_statement_registers_only_the_views_it_names(session, monkeypatch):
+    assert _views_registered(
+        session, monkeypatch, "SELECT table_name FROM information_schema.tables"
+    ) == ["information_schema_tables"]
+    # a pg_* function call names no catalog relation
+    assert _views_registered(session, monkeypatch, "SELECT pg_typeof(1)") == []
+
+
+#: inventory relations no view serves
+_UNSERVED = {
+    "information_schema_administrable_role_authorizations",
+    "information_schema_applicable_roles",
+    "information_schema_constraint_column_usage",
+    "information_schema_enabled_roles",
+    "information_schema_foreign_server_options",
+    "information_schema_foreign_table_options",
+    "information_schema_referential_constraints",
+    "information_schema_role_table_grants",
+    "information_schema_user_mapping_options",
+    "information_schema_user_mappings",
+    "information_schema_view_column_usage",
+    "pg_catalog_pg_subscription_rel",
+}
+#: views the engine serves that the reference inventory does not list
+_ENGINE_ONLY = {"sys_metrics", "sys_tables"}
+
+
+def test_system_inventory_agrees_with_served_views():
+    from crate_spark.engine import _SYSTEM_TABLE_INVENTORY, _SYSTEM_VIEWS
+
+    inventory = {
+        f"{sch}_{t}" for sch, names in _SYSTEM_TABLE_INVENTORY.items() for t in names
+    }
+    assert inventory - _SYSTEM_VIEWS.keys() == _UNSERVED
+    assert _SYSTEM_VIEWS.keys() - inventory == _ENGINE_ONLY
+
+
+def test_sys_jobs_metrics_serves_the_metrics_rows(session):
+    """sys.jobs_metrics is the reference's name (SysMetricsTableInfo)
+    for what the engine also serves as sys.metrics."""
+    session.execute("SELECT 1 AS warmup").collect()
+    assert (
+        session.execute("SELECT * FROM sys.jobs_metrics").columns
+        == session.execute("SELECT * FROM sys.metrics").columns
+    )
+    # one statement reads both, so both see the same jobs log
+    rows = session.execute(
+        "SELECT 'j' AS src, classification, total_count, failed_count "
+        "FROM sys.jobs_metrics UNION ALL "
+        "SELECT 'm', classification, total_count, failed_count FROM sys.metrics"
+    ).collect()
+    by_src = {
+        src: sorted(tuple(r)[1:] for r in rows if r["src"] == src)
+        for src in ("j", "m")
+    }
+    assert by_src["m"] and by_src["j"] == by_src["m"]
+
+
+def _catalog_registrations(root):
+    """(path:line, what) for each catalog temp-view registration that
+    bypasses ``CrateSession._register_system_views``."""
+    import ast
+
+    prefixes = ("sys_", "information_schema_", "pg_catalog_")
+
+    def literal_prefix(arg):
+        if isinstance(arg, ast.Constant) and isinstance(arg.value, str):
+            return arg.value
+        if isinstance(arg, ast.JoinedStr) and arg.values:
+            return literal_prefix(arg.values[0])
+        if isinstance(arg, ast.BinOp):
+            return literal_prefix(arg.left)
+        return ""
+
+    found = []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        spans = {}  # function name -> [(first, last line)]
+        for node in ast.walk(tree):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                spans.setdefault(node.name, []).append((node.lineno, node.end_lineno))
+
+        def inside(fn, line):
+            return any(lo <= line <= hi for lo, hi in spans.get(fn, ()))
+
+        where = f"{path.relative_to(root.parent)}"
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            fname = getattr(node.func, "attr", getattr(node.func, "id", None))
+            if (
+                fname == "createOrReplaceTempView"
+                and node.args
+                and literal_prefix(node.args[0]).startswith(prefixes)
+                and not inside("_register_system_views", node.lineno)
+            ):
+                found.append((f"{where}:{node.lineno}", "temp view"))
+            if fname == "_register_system_views" and not inside(
+                "_ensure_system_views", node.lineno
+            ):
+                found.append((f"{where}:{node.lineno}", "caller"))
+    return found
+
+
+def test_one_path_registers_catalog_views():
+    """Catalog temp views are registered only by
+    ``_register_system_views``, and only ``_ensure_system_views``
+    calls it: a second registration path would bring back views that
+    are stale or belong to another session."""
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "crate_spark"
+    assert _catalog_registrations(root) == []
