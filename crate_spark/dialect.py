@@ -45,6 +45,8 @@ import itertools
 import re
 import time
 
+from crate_spark import datatypes
+
 try:  # recursive patterns (unbounded paren nesting in operands);
     # public PyPI `regex` — fall back to bounded `re` patterns if absent
     import regex as _rx
@@ -144,6 +146,27 @@ _CAST_RE = _RE.compile(
     r"(?:\s*\[\s*\])?)",
     re.IGNORECASE,
 )
+#: typed literals <type> 'value' -> CAST (data-types.rst "you can also
+#: use the type name followed by a string literal") for the table's
+#: spellings, longest first, plus numeric(p,s). Spark's own DATE /
+#: TIMESTAMP / TIMESTAMP_NTZ / INTERVAL literals stay; TIME WITH TIME
+#: ZONE casts need the operand and stay on the ``::`` path. Anchored to
+#: the literal, so a column named like a type is unaffected.
+_TYPED_LITERAL_RE = re.compile(
+    r"\b(numeric\s*\(\s*\d+\s*,\s*\d+\s*\)|"
+    + "|".join(
+        s.replace(" ", r"\s+")
+        for s in sorted(datatypes.BY_SPELLING, key=len, reverse=True)
+        if s not in ("date", "timestamp", "timestamp_ntz", "interval",
+                     "timetz", "time with time zone")
+    )
+    + r")\s+(__LIT_\d+__)",
+    re.IGNORECASE,
+)
+#: pg_typeof's CASE arms: Spark type -> its canonical row's name
+_PG_TYPEOF_ARMS = "".join(
+    f"WHEN '{spark}' THEN '{t.name}' " for spark, t in datatypes.BY_SPARK.items()
+)
 _SUBSCRIPT_RE = _RE.compile(rf"(?P<base>{_sub_base()})\s*\[\s*(?P<idx>\d+)\s*\]")
 #: 1-based inclusive slice subscript arr[from:to] with optional open
 #: ends (AstBuilder subscript grammar -> ArraySliceFunction)
@@ -151,50 +174,6 @@ _SUBSCRIPT_SLICE_RE = _RE.compile(
     rf"(?P<base>{_sub_base()})\s*\[\s*(?P<frm>(?i:null)|\d*)\s*"
     rf":\s*(?P<to>(?i:null)|\d*)\s*\]"
 )
-
-
-#: reference cast-type spellings (data-types.rst, pg-compat aliases)
-#: that Spark's CAST grammar doesn't know; everything else passes
-#: through (Spark handles int/bigint/varchar(n)/numeric(p,s)/...)
-_CAST_TYPE_MAP = {
-    "bytea": "BINARY", "text": "STRING", "int2": "SMALLINT", "int4": "INT",
-    "int8": "BIGINT", "float4": "FLOAT", "float8": "DOUBLE", "real": "FLOAT",
-    "ip": "STRING", "regclass": "STRING", "regproc": "STRING",
-    # bare numeric: enough scale for display parity, enough headroom
-    # that sum/avg over bigint-range values don't overflow
-    "numeric": "DECIMAL(38,6)",
-    "timestampwithtimezone": "TIMESTAMP",
-    "timestampwithouttimezone": "TIMESTAMP_NTZ",
-    "timestamptz": "TIMESTAMP",
-    "timewithtimezone": "STRING", "timewithouttimezone": "STRING",
-    "doubleprecision": "DOUBLE", "charactervarying": "STRING",
-    "regtype": "STRING", "timetz": "STRING", "geo_shape": "STRING",
-    "geo_point": "ARRAY<DOUBLE>",
-    # bare varchar = text in the reference (data-types.rst: "varchar
-    # without a length limit"); Spark's VARCHAR demands a length
-    "varchar": "STRING",
-}
-
-
-def _cast_type(t: str) -> str:
-    key = re.sub(r"\s+", "", t.lower())
-    if key.endswith("[]"):  # PG array-type spelling int[] / text[]
-        return f"ARRAY<{_cast_type(key[:-2])}>"
-    m = re.fullmatch(r"array\((.+)\)", key)
-    if m:  # crate array(inner) spelling (data-types.rst)
-        return f"ARRAY<{_cast_type(m.group(1))}>"
-    if key.startswith("float_vector"):
-        return "ARRAY<FLOAT>"
-    if re.fullmatch(r"bit\(\d+\)", key):
-        return "STRING"
-    # json and OBJECT[(policy)][AS (...)] casts: the engine's object
-    # representation is a JSON string, so these are identity-shaped
-    # (data-types.rst json / object cast examples)
-    if key in ("json", "uuid"):
-        return "STRING"
-    if re.fullmatch(r"object(\((strict|dynamic|ignored)\))?(as\(.*\))?", key):
-        return "STRING"
-    return _CAST_TYPE_MAP.get(key, t)
 
 
 def _subscript_slice_sub(m: re.Match) -> str:
@@ -684,24 +663,6 @@ _FN_TEMPLATES: dict = {
 }
 
 
-#: PG type oid -> CrateDB DataType name (FormatTypeFunction calls
-#: PGTypes.fromOID(oid).getName(); oids from protocols/postgres/types/)
-_PG_OID_NAMES = {
-    16: "boolean", 18: '"char"', 19: "name", 20: "bigint", 21: "smallint",
-    23: "integer", 25: "text", 26: "oid", 114: "json", 600: "geo_point",
-    700: "real", 701: "double precision", 1042: "character", 1043: "text",
-    1082: "date", 1114: "timestamp without time zone",
-    1184: "timestamp with time zone", 1186: "interval", 1560: "bit",
-    1700: "numeric", 2950: "uuid",
-}
-#: array-type oid -> element oid (PGArray OIDs)
-_PG_ARRAY_OIDS = {
-    1000: 16, 1005: 21, 1007: 23, 1016: 20, 1021: 700, 1022: 701,
-    1015: 1043, 199: 114, 1115: 1114, 1182: 1082, 1185: 1184,
-    1561: 1560, 1231: 1700, 2951: 2950,
-}
-
-
 def _null_or_empty_sql(a: list[str], lits: list[str]) -> str | None:
     """NullOrEmptyFunction (null-or-empty-array / -object): arrays use
     size(); OBJECT operands — literals (already rewritten to
@@ -856,10 +817,8 @@ def _format_type_sql(a: list[str]) -> str | None:
     if len(a) != 2:
         return None
     arms = "".join(
-        f"WHEN {oid} THEN '{name}' " for oid, name in _PG_OID_NAMES.items()
-    ) + "".join(
-        f"WHEN {oid} THEN '{_PG_OID_NAMES[el]}[]' "
-        for oid, el in _PG_ARRAY_OIDS.items()
+        f"WHEN {oid} THEN '{name}' "
+        for oid, name in datatypes.FORMAT_NAMES.items()
     )
     return (
         f"(CASE WHEN {a[0]} IS NULL THEN CAST(NULL AS STRING) "
@@ -2631,11 +2590,11 @@ def _struct_array_literal_subscripts(sql: str, literals: list[str]) -> str:
 
 def _map_cast_as_types(sql: str) -> str:
     """Map the trailing ``AS <type>`` of each ``[TRY_]CAST(...)`` span
-    through ``_cast_type`` (bare varchar -> STRING, int8 -> BIGINT,
+    through ``datatypes.cast_type`` (bare varchar -> STRING, int8 -> BIGINT,
     double precision -> DOUBLE, ...). Anchored to CAST spans so an
     alias that happens to be named like a type is never rewritten;
     parameterized types (varchar(5), numeric(10,2)) come back from
-    ``_cast_type`` unchanged and stay native."""
+    ``cast_type`` unchanged and stay native."""
     pos = 0
     while True:
         m = re.search(r"\b(?:TRY_)?CAST\s*\(", sql[pos:], re.IGNORECASE)
@@ -2656,7 +2615,7 @@ def _map_cast_as_types(sql: str) -> str:
                 as_idx, as_end = am.start(), am.end()
         if as_idx >= 0:
             t = inner[as_end:].strip()
-            mapped = _cast_type(t)
+            mapped = datatypes.cast_type(t)
             if mapped != t:
                 sql = (
                     sql[: open_idx + 1]
@@ -3832,44 +3791,9 @@ def rewrite(
             sql,
         )
 
-    # typed literals: <TYPE> 'value' -> CAST (data-types.rst "you can
-    # also use the type name followed by a string literal"); DATE /
-    # TIMESTAMP / INTERVAL are Spark-native and stay
-    _TYPED_LIT = {
-        "integer": "INT", "int": "INT", "bigint": "BIGINT",
-        "smallint": "SMALLINT", "real": "FLOAT",
-        "double precision": "DOUBLE", "boolean": "BOOLEAN",
-        "ip": "STRING", "text": "STRING",
-        # crate/PG alias spellings (CastFunctionTest: string '10.4',
-        # long '-4', int4 '1' — r10)
-        "string": "STRING", "long": "BIGINT", "short": "SMALLINT",
-        "int2": "SMALLINT", "int4": "INT", "int8": "BIGINT",
-        "float4": "FLOAT", "float8": "DOUBLE",
-        "timestamp with time zone": "TIMESTAMP",
-        "timestamp without time zone": "TIMESTAMP_NTZ",
-    }
-
-    def _typed_lit(m: re.Match) -> str:
-        t = re.sub(r"\s+", " ", m.group(1).lower())
-        nm = re.match(r"numeric\s*(\(\s*\d+\s*,\s*\d+\s*\))?", t)
-        if nm:
-            target = "DECIMAL" + (re.sub(r"\s", "", nm.group(1)) if nm.group(1) else "(38,6)")
-        else:
-            target = _TYPED_LIT[t]
-        return f"CAST({m.group(2)} AS {target})"
-
-    sql = re.sub(
-        r"\b(TIMESTAMP\s+WITH(?:OUT)?\s+TIME\s+ZONE|DOUBLE\s+PRECISION|"
-        r"NUMERIC\s*\(\s*\d+\s*,\s*\d+\s*\)|NUMERIC|INTEGER|INT|BIGINT|"
-        r"SMALLINT|REAL|IP|BOOLEAN|TEXT|"
-        # crate/PG alias spellings (CastFunctionTest r10); STRING is
-        # anchored to the literal so SELECT string FROM t (a column
-        # named string) is unaffected
-        r"STRING|LONG|SHORT|INT2|INT4|INT8|FLOAT4|FLOAT8)"
-        r"\s+(__LIT_\d+__)",
-        _typed_lit,
+    sql = _TYPED_LITERAL_RE.sub(
+        lambda m: f"CAST({m.group(2)} AS {datatypes.cast_type(m.group(1))})",
         sql,
-        flags=re.IGNORECASE,
     )
 
     # expr AT TIME ZONE 'z' (PG; data-types.rst): a WITH-tz operand
@@ -3903,7 +3827,7 @@ def rewrite(
         if not (body.strip().startswith("{") and body.strip().endswith("}")):
             return m.group(0)
         arr = _pg_array_literal_to_sql(body)
-        elem = _cast_type(
+        elem = datatypes.cast_type(
             re.sub(r"\s+", "", m.group("ty") or m.group("ty2"))
         )
         if elem.upper() == "STRING":
@@ -4387,7 +4311,7 @@ def rewrite(
                         if tm.group(4) == "-":
                             off = -off
                     return f"array(CAST({us} AS BIGINT), CAST({off} AS BIGINT))"
-        target = _cast_type(m.group("ty"))
+        target = datatypes.cast_type(m.group("ty"))
         # string-literal -> timestamp casts: the reference's parser is
         # laxer than Spark's ('1852-05-04T00:00Z' — minutes precision
         # with zone); normalize via fromisoformat at rewrite time
@@ -4435,17 +4359,10 @@ def rewrite(
     sql = re.sub(
         r"::\s*([A-Za-z_]\w*)\b(?!\s*\()",
         lambda m: m.group(0)
-        if _cast_type(m.group(1)) == m.group(1)
-        or not re.fullmatch(r"[A-Za-z_][\w<>,()]*", _cast_type(m.group(1)))
-        else f"::{_cast_type(m.group(1))}",
+        if datatypes.cast_type(m.group(1)) == m.group(1)
+        or not re.fullmatch(r"[A-Za-z_][\w<>,()]*", datatypes.cast_type(m.group(1)))
+        else f"::{datatypes.cast_type(m.group(1))}",
         sql,
-    )
-    # explicit CAST targets in crate's array(inner) spelling
-    sql = re.sub(
-        r"\bAS\s+ARRAY\s*\(\s*([\w ]+)\s*\)",
-        lambda m: "AS " + _cast_type(f"array({m.group(1)})"),
-        sql,
-        flags=re.IGNORECASE,
     )
     sql = _SUBSCRIPT_SLICE_RE.sub(_subscript_slice_sub, sql)
     sql = _SUBSCRIPT_RE.sub(r"element_at(\g<base>, \g<idx>)", sql)
@@ -4629,17 +4546,14 @@ def rewrite(
                 sql,
                 flags=re.IGNORECASE,
             )
-    # pg_typeof returns PG/crate type NAMES (PgTypeofFunction), not
-    # Spark's: integer / text / double precision / integer[] ...
+    # pg_typeof returns the type table's names (PgTypeofFunction), not
+    # Spark's: integer / text / double precision / integer_array ...;
+    # the ELSE arms mirror datatypes.name_of's decimal/struct/map rules
     def _pg_name(t: str) -> str:
         return (
-            f"(CASE {t} WHEN 'int' THEN 'integer' WHEN 'string' THEN 'text' "
-            f"WHEN 'double' THEN 'double precision' WHEN 'float' THEN 'real' "
-            f"WHEN 'tinyint' THEN '\"char\"' WHEN 'binary' THEN 'bytea' "
-            f"WHEN 'timestamp' THEN 'timestamp with time zone' "
-            f"WHEN 'timestamp_ntz' THEN 'timestamp without time zone' "
-            f"WHEN 'void' THEN 'undefined' "
-            f"ELSE (CASE WHEN {t} LIKE 'decimal%' THEN 'numeric' ELSE {t} END) END)"
+            f"(CASE {t} {_PG_TYPEOF_ARMS}ELSE (CASE WHEN {t} LIKE 'decimal%' THEN "
+            f"'numeric' WHEN {t} LIKE 'struct<%' OR {t} LIKE 'map<%' THEN "
+            f"'object' ELSE {t} END) END)"
         )
 
     while True:
@@ -4801,16 +4715,18 @@ def rewrite(
     )
 
     sql = _rewrite_order_by(sql)
-    for i, lit in enumerate(literals):
-        if i < n_input_lits:
-            # PG/CrateDB string literals are standard-conforming:
-            # backslash is a literal character ('\d' stays '\d').
-            # Spark's parser treats it as an escape, so double it at
-            # unmask time. Literals appended by rewrite templates are
-            # already Spark-escaped and emit verbatim.
-            lit = lit.replace("\\", "\\\\")
-        sql = sql.replace(f"__LIT_{i}__", lit)
-    return sql
+    def _unmask(m: re.Match) -> str:
+        i = int(m.group(1))
+        # PG/CrateDB string literals are standard-conforming: backslash
+        # is a literal character ('\d' stays '\d'). Spark's parser
+        # treats it as an escape, so double it at unmask time. Literals
+        # appended by rewrite templates are already Spark-escaped and
+        # emit verbatim.
+        return literals[i].replace("\\", "\\\\") if i < n_input_lits else literals[i]
+
+    # single pass: text already put back is never rescanned, so a
+    # literal that reads like a mask token survives
+    return re.sub(r"__LIT_(\d+)__", _unmask, sql)
 
 
 #: system doc columns every table exposes in the reference

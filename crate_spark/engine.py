@@ -28,6 +28,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from crate_spark import datatypes
 from crate_spark.dialect import _LIT_RE, rewrite, rewrite_sys_columns
 from crate_spark.session import (
     TABLES, apply_runtime_confs, ddl_schema, load_tables, local_frame,
@@ -54,25 +55,6 @@ def _sql_literal(v) -> str:
     if isinstance(v, bytes):
         return f"unhex('{v.hex()}')"
     return "'" + str(v).replace("'", "''") + "'"
-
-
-#: Spark type -> PG type OID (PGTypes.java mapping, the subset the
-#: synthetic tables use; 705 = PG's 'unknown' for everything else)
-_PG_OIDS = {
-    "boolean": 16, "bigint": 20, "smallint": 21, "int": 23,
-    "string": 25, "float": 700, "double": 701,
-    "timestamp": 1114, "timestamp_ntz": 1114, "date": 1082,
-    "binary": 17,
-}
-
-
-def _pg_type_oid(dt) -> int:
-    s = dt.simpleString()
-    if s.startswith("decimal"):
-        return 1700
-    if s.startswith("array"):
-        return 2277  # anyarray
-    return _PG_OIDS.get(s, 705)
 
 
 #: the reference's fixed system-catalog inventory as listed by
@@ -418,7 +400,6 @@ def _information_schema_columns(s) -> list[tuple]:
     # declaration order — for SQL-created tables with declared DDL;
     # registered parquet sources fall back to spark-type-derived names
     from crate_spark.cluster_settings import SETTINGS_COLUMNS
-    from crate_spark.sql_dml import _spark_to_crate
 
     rows = []
     for name, df in sorted(s.tables.items()):
@@ -441,7 +422,7 @@ def _information_schema_columns(s) -> list[tuple]:
             for pos, f in enumerate(df.schema.fields, start=1):
                 rows.append(
                     (name, schema_name, f.name, pos,
-                     _spark_to_crate(f.dataType.simpleString()), f.nullable)
+                     datatypes.name_of(f.dataType.simpleString()), f.nullable)
                 )
     # self-description (information-schema.rst:395-447)
     rows += [
@@ -683,7 +664,8 @@ def _pg_class(s) -> list[tuple]:
 
 def _pg_attribute(s) -> list[tuple]:
     return [
-        (16384 + i, f.name, _pg_type_oid(f.dataType), pos, not f.nullable)
+        (16384 + i, f.name, datatypes.pg_oid(f.dataType.simpleString()), pos,
+         not f.nullable)
         for i, n in enumerate(sorted(s.tables))
         for pos, f in enumerate(s.tables[n].schema.fields, start=1)
     ]
@@ -714,69 +696,6 @@ def _pg_publication_tables(s) -> list[tuple]:
         rows += [(name, "doc", t) for t in tnames]
     return rows
 
-
-#: pg_type: the reference's full 54-row catalog inventory (PGTypes.java;
-#: listed verbatim in interfaces/postgres.rst) — standard PostgreSQL
-#: catalog facts: oid, typname, typarray (oid of the array type),
-#: typelem (element oid for arrays), typlen (-1 varlena, -2 cstring),
-#: typtype (b base/p pseudo), typcategory (N numeric, S string, A
-#: array, D datetime, ...)
-_PG_TYPE_ROWS = [
-    (16, "bool", 1000, 0, 1, "b", "N"),
-    (18, "char", 1002, 0, 1, "b", "S"),
-    (19, "name", -1, 0, 64, "b", "S"),
-    (20, "int8", 1016, 0, 8, "b", "N"),
-    (21, "int2", 1005, 0, 2, "b", "N"),
-    (23, "int4", 1007, 0, 4, "b", "N"),
-    (24, "regproc", 1008, 0, 4, "b", "N"),
-    (25, "text", 1009, 0, -1, "b", "S"),
-    (26, "oid", 1028, 0, 4, "b", "N"),
-    (30, "oidvector", 1013, 26, -1, "b", "A"),
-    (114, "json", 199, 0, -1, "b", "U"),
-    (199, "_json", 0, 114, -1, "b", "A"),
-    (600, "point", 1017, 0, 16, "b", "G"),
-    (700, "float4", 1021, 0, 4, "b", "N"),
-    (701, "float8", 1022, 0, 8, "b", "N"),
-    (705, "unknown", 0, 0, -2, "p", "X"),
-    (1000, "_bool", 0, 16, -1, "b", "A"),
-    (1002, "_char", 0, 18, -1, "b", "A"),
-    (1005, "_int2", 0, 21, -1, "b", "A"),
-    (1007, "_int4", 0, 23, -1, "b", "A"),
-    (1008, "_regproc", 0, 24, -1, "b", "A"),
-    (1009, "_text", 0, 25, -1, "b", "A"),
-    (1014, "_bpchar", 0, 1042, -1, "b", "A"),
-    (1015, "_varchar", 0, 1043, -1, "b", "A"),
-    (1016, "_int8", 0, 20, -1, "b", "A"),
-    (1017, "_point", 0, 600, -1, "b", "A"),
-    (1021, "_float4", 0, 700, -1, "b", "A"),
-    (1022, "_float8", 0, 701, -1, "b", "A"),
-    (1042, "bpchar", 1014, 0, -1, "b", "S"),
-    (1043, "varchar", 1015, 0, -1, "b", "S"),
-    (1082, "date", 1182, 0, 4, "b", "D"),
-    (1114, "timestamp", 1115, 0, 8, "b", "D"),
-    (1115, "_timestamp", 0, 1114, -1, "b", "A"),
-    (1182, "_date", 0, 1082, -1, "b", "A"),
-    (1184, "timestamptz", 1185, 0, 8, "b", "D"),
-    (1185, "_timestamptz", 0, 1184, -1, "b", "A"),
-    (1186, "interval", 1187, 0, 16, "b", "T"),
-    (1187, "_interval", 0, 1186, -1, "b", "A"),
-    (1231, "_numeric", 0, 1700, -1, "b", "A"),
-    (1266, "timetz", 1270, 0, 12, "b", "D"),
-    (1270, "_timetz", 0, 1266, -1, "b", "A"),
-    (1560, "bit", 1561, 0, -1, "b", "V"),
-    (1561, "_bit", 0, 1560, -1, "b", "A"),
-    (1700, "numeric", 1231, 0, -1, "b", "N"),
-    (2205, "regclass", 2210, 0, 4, "b", "N"),
-    (2206, "regtype", 2211, 0, 4, "b", "N"),
-    (2210, "_regclass", 0, 2205, -1, "b", "A"),
-    (2211, "_regtype", 0, 2206, -1, "b", "A"),
-    (2249, "record", 2287, 0, -1, "p", "P"),
-    (2276, "any", 0, 0, 4, "p", "P"),
-    (2277, "anyarray", 0, 2276, -1, "p", "P"),
-    (2287, "_record", 0, 2249, -1, "p", "A"),
-    (2950, "uuid", 2951, 0, 16, "b", "U"),
-    (2951, "_uuid", 0, 2950, -1, "b", "A"),
-]
 
 #: sys.metrics, also served under the reference's name sys.jobs_metrics
 #: (SysMetricsTableInfo)
@@ -1040,7 +959,7 @@ _SYSTEM_VIEWS: dict[str, tuple[str, Callable[[CrateSession], list]]] = {
     "pg_catalog_pg_type": (
         "oid int, typname string, typarray int, typelem int, "
         "typlen int, typtype string, typcategory string",
-        lambda s: _PG_TYPE_ROWS,
+        lambda s: [r[:7] for r in datatypes.PG_TYPES],
     ),
     "pg_catalog_pg_class": (
         "oid int, relname string, relnamespace int, relkind string, relnatts int",
@@ -1156,6 +1075,17 @@ _SYSTEM_VIEWS: dict[str, tuple[str, Callable[[CrateSession], list]]] = {
         _no_rows,
     ),
 }
+
+
+def _show_type(simple: str) -> str:
+    """SHOW CREATE TABLE spelling of a Spark type: its CrateDB name,
+    upper-cased; arrays as ARRAY(...), decimals keep (p,s)."""
+    m = re.fullmatch(r"array<(.+)>", simple)
+    if m:
+        return f"ARRAY({_show_type(m.group(1))})"
+    if simple.startswith("decimal"):
+        return "NUMERIC" + simple[len("decimal"):]
+    return datatypes.name_of(simple).upper()
 
 
 class CrateSession:
@@ -2292,23 +2222,6 @@ class CrateSession:
 
         return self._CURRENT_SETTING_RE.sub(repl, stmt)
 
-    #: Spark DDL type -> CrateDB spelling (reverse of sql_dml._TYPE_MAP)
-    _CRATE_TYPES = {
-        "string": "TEXT", "int": "INTEGER", "bigint": "BIGINT",
-        "smallint": "SMALLINT", "tinyint": "BYTE", "float": "REAL",
-        "double": "DOUBLE PRECISION", "boolean": "BOOLEAN",
-        "date": "DATE", "timestamp": "TIMESTAMP WITH TIME ZONE",
-        "timestamp_ntz": "TIMESTAMP WITHOUT TIME ZONE",
-    }
-
-    def _crate_type(self, simple: str) -> str:
-        if simple.startswith("decimal"):
-            return simple.upper().replace("DECIMAL", "NUMERIC")
-        m = re.match(r"array<(.+)>$", simple)
-        if m:
-            return f"ARRAY({self._crate_type(m.group(1))})"
-        return self._CRATE_TYPES.get(simple, simple.upper())
-
     def _show_create_table(self, name: str) -> str:
         """SHOW CREATE TABLE (reference ShowCreateTableAnalyzer /
         MetadataToASTNodeResolver): reconstruct CrateDB-spelled DDL
@@ -2347,7 +2260,7 @@ class CrateSession:
                 spelled = (
                     _decl_type(decl, 3)
                     if decl is not None and decl.get("type")
-                    else self._crate_type(f.dataType.simpleString())
+                    else _show_type(f.dataType.simpleString())
                 )
                 line = f'   "{f.name}" {spelled}'
                 if f.name in not_null:
@@ -2401,7 +2314,7 @@ class CrateSession:
         if name in self.tables:
             fields = self.tables[name].schema.fields
             body = ",\n".join(
-                f'   "{f.name}" {self._crate_type(f.dataType.simpleString())}'
+                f'   "{f.name}" {_show_type(f.dataType.simpleString())}'
                 for f in fields
             )
             return f'CREATE TABLE IF NOT EXISTS "doc"."{name}" (\n{body}\n)'
@@ -2717,7 +2630,7 @@ class CrateSession:
         pandas Series (Arrow-batched, ~10-100x faster — the right
         choice at scale when a built-in genuinely can't express it).
         """
-        from crate_spark.sql_dml import _map_type, _split_top
+        from crate_spark.sql_dml import _split_top
 
         schema = (schema or self._search_path()[0]).lower()
         if schema in ("sys", "information_schema"):
@@ -2726,7 +2639,7 @@ class CrateSession:
             raise ValueError(
                 f"Cannot create a function in the read-only schema '{schema}'"
             )
-        ret_type = _map_type(ret_type)
+        ret_type = datatypes.spark_type(ret_type)
         # The reference runs UDF bodies in a sandboxed GraalVM JS context
         # (UserDefinedFunctionService). A Python eval cannot be a real
         # sandbox, so (a) CREATE FUNCTION must only be exposed to trusted
@@ -2817,12 +2730,10 @@ class CrateSession:
             body_fn = None
         # coerce inputs to natural Python types (SQL decimal literals
         # arrive as decimal.Decimal, which breaks float arithmetic)
-        _float_types = {"double", "real", "float", "double precision"}
-        _int_types = {"int", "integer", "bigint", "smallint", "byte"}
         declared_types = [
             " ".join(s[1:]).lower() if len(s) > 1 else "" for s in specs
         ]
-        sig = tuple(_map_type(t) if t else "" for t in declared_types)
+        sig = tuple(datatypes.spark_type(t) if t else "" for t in declared_types)
         def _obj_parse(x):
             # OBJECT values ride the engine as JSON strings (dynamic
             # object representation); a JS UDF's declared-object param
@@ -2837,10 +2748,10 @@ class CrateSession:
             return x
 
         coercers = []
-        for declared in declared_types:
-            if declared in _float_types:
+        for declared, st in zip(declared_types, sig):
+            if st in datatypes.FRACTIONAL:
                 coercers.append(float)
-            elif declared in _int_types:
+            elif st in datatypes.INTEGRAL:
                 coercers.append(int)
             elif language == "JAVASCRIPT" and declared.startswith("object"):
                 coercers.append(_obj_parse)
@@ -2863,10 +2774,10 @@ class CrateSession:
             import pandas as _pd
 
             dtypes = [
-                "float64" if d in _float_types
-                else "int64" if d in _int_types
+                "float64" if st in datatypes.FRACTIONAL
+                else "int64" if st in datatypes.INTEGRAL
                 else None
-                for d in declared_types
+                for st in sig
             ]
             pbody_fn = eval(  # noqa: S307 - trusted-caller surface by design
                 f"lambda {', '.join(arg_names)}: ({body})",
@@ -2922,13 +2833,6 @@ class CrateSession:
             [(f"{schema}.{name}", ret_type)], "function string, returns string"
         )
 
-    #: widening order for overloads whose return types differ — the
-    #: single Spark registration must pick one result type
-    _NUM_RANK = {
-        "tinyint": 0, "smallint": 1, "int": 2, "bigint": 3,
-        "float": 4, "double": 5,
-    }
-
     def _register_udf_dispatch(self, schema: str, name: str) -> None:
         """(Re-)register the single mangled Spark UDF for a (schema,
         name) pair: an arity dispatcher over its overloads. Two
@@ -2951,10 +2855,13 @@ class CrateSession:
             if cur is None or o["seq"] > cur["seq"]:
                 by_arity[len(s)] = o
         rets = {o["ret"] for o in overloads.values()}
+        widening = datatypes.INTEGRAL + datatypes.FRACTIONAL
         if len(rets) == 1:
             ret = next(iter(rets))
-        elif all(r in self._NUM_RANK for r in rets):
-            ret = max(rets, key=self._NUM_RANK.get)
+        elif all(r in widening for r in rets):
+            # overload return types differ: the single Spark
+            # registration takes the widest numeric one
+            ret = max(rets, key=widening.index)
         else:
             ret = max(overloads.values(), key=lambda o: o["seq"])["ret"]
         mangled = self._udf_spark_name(schema, name)
@@ -2982,7 +2889,7 @@ class CrateSession:
         (drop-function.rst): with an argument list, drop exactly that
         overload; without one, drop every overload of the name. The
         mangled registration means Spark builtins are never touched."""
-        from crate_spark.sql_dml import _map_type, _split_top
+        from crate_spark.sql_dml import _split_top
 
         schema, _, name = qname.rpartition(".")
         schema = (schema or self._search_path()[0]).lower()
@@ -2995,7 +2902,7 @@ class CrateSession:
             raise ValueError(f"Unknown function: {qname}")
         if argspec is not None:
             sig = tuple(
-                _map_type(_sig_item_type(a))
+                datatypes.spark_type(_sig_item_type(a))
                 for a in _split_top(argspec)
                 if a.strip()
             )
@@ -3146,25 +3053,12 @@ def _parse_global_assignments(body: str) -> list[tuple[str, object]]:
     return out
 
 
-#: words that can START a type spelling in a function signature — used
-#: to tell `name type` items from bare `type` items (`double precision`
-#: has no name; `"start" geo_point` does)
-_TYPE_HEAD_WORDS = {
-    "text", "ip", "object", "varchar", "character", "uuid", "json",
-    "timestamp", "timestamptz", "byte", "short", "integer", "long",
-    "real", "double", "geo_point", "geo_shape", "float_vector",
-    "boolean", "bit", "char", "regproc", "regclass", "oidvector",
-    "time", "timetz", "string", "int", "bigint", "smallint", "tinyint",
-    "float", "decimal", "numeric", "array", "interval", "date",
-}
-
-
 def _sig_item_type(item: str) -> str:
     """One signature item -> its bare type spelling, dropping an
     optional leading argument name (create-function.rst: names in
     signatures are allowed and ignored for identity)."""
     toks = item.strip().split()
-    if len(toks) > 1 and toks[0].split("(")[0].strip('"').lower() not in _TYPE_HEAD_WORDS:
+    if len(toks) > 1 and toks[0].split("(")[0].strip('"').lower() not in datatypes.TYPE_HEADS:
         toks = toks[1:]
     return " ".join(toks)
 

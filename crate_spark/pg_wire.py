@@ -29,24 +29,14 @@ import socketserver
 import struct
 import threading
 
+from crate_spark import datatypes
+
 _SSL_REQUEST = 80877103
 
 #: serializes statement execution across wire connections so the
 #: per-connection user scoping on the shared CrateSession is race-free
 _EXEC_LOCK = threading.Lock()
 _CANCEL_REQUEST = 80877102
-
-#: PG type OIDs for RowDescription (PGTypes.java mapping)
-_OIDS = {
-    "boolean": 16, "bigint": 20, "smallint": 21, "int": 23, "integer": 23,
-    "double": 701, "float": 700, "string": 25, "timestamp": 1114,
-    "date": 1082, "decimal": 1700, "binary": 17,
-}
-
-
-def _oid_of(spark_type: str) -> int:
-    base = spark_type.split("(")[0]
-    return _OIDS.get(base, 25)  # default: text
 
 
 def _text(v) -> str | None:
@@ -60,13 +50,28 @@ def _text(v) -> str | None:
     if isinstance(v, decimal.Decimal):
         return str(v)
     if isinstance(v, (list, tuple)):
-        return "{" + ",".join("NULL" if x is None else _text(x) for x in v) + "}"
+        return "{" + ",".join(_array_element(x) for x in v) + "}"
     if hasattr(v, "asDict"):
         d = v.asDict()
         return "{" + ",".join(f"{k}={_text(x)}" for k, x in d.items()) + "}"
     if isinstance(v, (bytes, bytearray)):
         return "\\x" + bytes(v).hex()
     return str(v)
+
+
+def _array_element(x) -> str:
+    """One array element in PG's array_out form: NULL bare, nested
+    arrays as-is, and elements that are empty, spell NULL or hold a
+    delimiter, brace, quote, backslash or whitespace double-quoted
+    with quote and backslash escaped."""
+    if x is None:
+        return "NULL"
+    t = _text(x)
+    if isinstance(x, (list, tuple)):
+        return t
+    if t == "" or t.upper() == "NULL" or any(c in t for c in '{},"\\ \t\n\r\v\f'):
+        return '"' + t.replace("\\", "\\\\").replace('"', '\\"') + '"'
+    return t
 
 
 def _sqlstate_of(exc: Exception) -> str:
@@ -176,14 +181,14 @@ class _PgHandler(socketserver.BaseRequestHandler):
             self._portals[portal.decode()] = df
             sock.sendall(_msg(b"2", b""))  # BindComplete
         except Exception as e:
-            self._error(sock, "42601", str(e).split("\n")[0][:400])
+            self._error(sock, _sqlstate_of(e), str(e).split("\n")[0][:400])
 
     def _describe(self, body: bytes) -> bytes:
         kind, name = body[0:1], body[1:].rstrip(b"\x00").decode()
         df = self._portals.get(name)
         if kind == b"S" or df is None:
             return _msg(b"n", b"")  # NoData for statement describes
-        return _msg(b"T", self._row_description(df))
+        return _msg(b"T", self._row_description(df.schema.fields))
 
     def _execute(self, sock, body: bytes) -> None:
         portal = body.split(b"\x00", 1)[0].decode()
@@ -196,7 +201,7 @@ class _PgHandler(socketserver.BaseRequestHandler):
             self._send_rows(sock, df.schema.fields, rows, with_description=False)
             sock.sendall(_msg(b"C", _cstr(f"SELECT {len(rows)}")))
         except Exception as e:
-            self._error(sock, "42601", str(e).split("\n")[0][:400])
+            self._error(sock, _sqlstate_of(e), str(e).split("\n")[0][:400])
 
     # -- protocol steps --------------------------------------------------
     def _startup(self, sock) -> bool:
@@ -261,25 +266,20 @@ class _PgHandler(socketserver.BaseRequestHandler):
         sock.sendall(_msg(b"Z", b"I"))
 
     @staticmethod
-    def _row_description(df) -> bytes:
-        fields = df.schema.fields
+    def _row_description(fields) -> bytes:
         desc = struct.pack("!H", len(fields))
         for f in fields:
             # table oid, attnum, type oid, typlen -1 (variable),
             # typmod -1, format 0 (text)
             desc += _cstr(f.name) + struct.pack(
-                "!IHIhih", 0, 0, _oid_of(f.dataType.simpleString()), -1, -1, 0
+                "!IHIhih", 0, 0, datatypes.pg_oid(f.dataType.simpleString()),
+                -1, -1, 0,
             )
         return desc
 
     def _send_rows(self, sock, fields, rows, *, with_description: bool) -> None:
         if with_description:
-            desc = struct.pack("!H", len(fields))
-            for f in fields:
-                desc += _cstr(f.name) + struct.pack(
-                    "!IHIhih", 0, 0, _oid_of(f.dataType.simpleString()), -1, -1, 0
-                )
-            sock.sendall(_msg(b"T", desc))
+            sock.sendall(_msg(b"T", self._row_description(fields)))
         self._data_rows(sock, fields, rows)
 
     @staticmethod

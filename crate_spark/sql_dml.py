@@ -25,110 +25,16 @@ import shutil
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from crate_spark import datatypes
 from crate_spark.dialect import rewrite
 from crate_spark.dml import CrateTable
 from crate_spark.session import ddl_schema, local_frame
 
-#: CrateDB type spellings -> Spark DDL types
-#: (reference ``types/DataTypes.java``; object columns are stored as
-#: JSON strings per SURVEY.md §7 hard part (a))
-_TYPE_MAP = {
-    "text": "string",
-    "ip": "string",
-    "object": "string",
-    "varchar": "string",
-    "character varying": "string",
-    "uuid": "string",
-    "json": "string",
-    "timestamp with time zone": "timestamp",
-    "timestamp without time zone": "timestamp_ntz",
-    "timestamptz": "timestamp",
-    "byte": "tinyint",
-    "short": "smallint",
-    "integer": "int",
-    "long": "bigint",
-    "real": "float",
-    "double precision": "double",
-    "geo_point": "array<double>",
-    # geo_shape stores as WKT text (general/ddl/data-types: shapes are
-    # GeoJSON/WKT at the boundary; our geo scalars parse WKT)
-    "geo_shape": "string",
-    "float_vector": "array<float>",
-    "boolean": "boolean",
-    "bit": "string",  # bit strings render as '010...' text
-    "char": "string",
-    "character": "string",
-    "regproc": "string",
-    "regclass": "string",
-    "oidvector": "array<int>",
-    "time with time zone": "string",
-    "timetz": "string",
-    "interval": "struct<months:bigint,days:int,micros:bigint>",
-}
-
-
-def _map_type(t: str) -> str:
-    # '"CHAR"' — PG's quoted internal one-byte char type spelling
-    key = re.sub(r"\s+", " ", t.strip().strip('"').lower())
-    if key in _TYPE_MAP:
-        return _TYPE_MAP[key]
-    # OBJECT with column policy and/or typed shape —
-    # object(strict|dynamic|ignored) [as (...)]: stored as a JSON
-    # string like bare object (SURVEY.md §7 hard part (a)); the
-    # declared inner shape is not enforced at write (dynamic policy)
-    if re.match(r"object(\s*\(\s*(strict|dynamic|ignored)\s*\))?(\s+as\s*\(.*\))?$", key):
-        return "string"
-    m = re.match(r"array\s*\(\s*(.+)\s*\)$", key)
-    if m:  # CrateDB array(inner) spelling
-        return f"array<{_map_type(m.group(1))}>"
-    m = re.match(r"(.+?)\s*\[\s*\]$", key)
-    if m:  # PG bracket spelling type[] (data-types.rst array aliases);
-        # recursion handles real[][] etc.
-        return f"array<{_map_type(m.group(1))}>"
-    # parameterized spellings (data-types.rst): length args are
-    # advisory on a string-typed store; numeric keeps precision/scale
-    if re.match(r"(varchar|character varying|char|character|bit)\s*\(\s*\d+\s*\)$", key):
-        return "string"
-    m = re.match(r"numeric\s*(\(\s*\d+\s*(,\s*\d+\s*)?\))?$", key)
-    if m:
-        return f"decimal{re.sub(chr(32), '', m.group(1))}" if m.group(1) else "decimal(38,18)"
-    m = re.match(r"float_vector\s*\(\s*\d+\s*\)$", key)
-    if m:
-        return "array<float>"
-    return t.strip()
-
-
-#: normalized crate spelling -> information_schema.columns data_type
-#: (information-schema.rst:363-381 prints lowercase reference names)
-_CRATE_NAME = {
-    "string": "text", "text": "text", "varchar": "text",
-    "character varying": "text", "char": "character",
-    "character": "character", "int": "integer", "integer": "integer",
-    "long": "bigint", "bigint": "bigint", "short": "smallint",
-    "smallint": "smallint", "byte": "byte", "float": "real",
-    "real": "real", "double": "double precision",
-    "double precision": "double precision",
-    "timestamp": "timestamp with time zone",
-    "timestamptz": "timestamp with time zone",
-    "timestamp with time zone": "timestamp with time zone",
-    "timestamp without time zone": "timestamp without time zone",
-    "boolean": "boolean", "ip": "ip", "geo_point": "geo_point",
-    "geo_shape": "geo_shape", "interval": "interval", "bit": "bit",
-    "date": "date",
-}
-
-
 def _crate_decl(raw: str) -> dict:
     """Parse one declared crate type into its information_schema form:
-    {"type": <data_type spelling>} plus, for objects, the declared
+    {"type": <data_type name>} plus, for objects, the declared
     subcolumns as {"children": [{"name", ...decl}]} (recursive)."""
-    key = re.sub(r"\s+", " ", raw.strip().lower()).rstrip()
-    m = re.match(
-        r"object(?:\s*\(\s*(strict|dynamic|ignored)\s*\))?"
-        r"(?:\s+as\s*\((.*)\))?$",
-        key,
-        re.DOTALL,
-    )
+    m = datatypes.OBJECT_RE.fullmatch(re.sub(r"\s+", " ", raw.strip().lower()))
     if m:
         children = []
         for item in _split_top(m.group(2)) if m.group(2) else []:
@@ -141,43 +47,17 @@ def _crate_decl(raw: str) -> dict:
         if m.group(1):
             out["policy"] = m.group(1)
         return out
-    m = re.match(r"array\s*\(\s*(.+)\s*\)$", key, re.DOTALL) or re.match(
-        r"(.+?)\s*\[\s*\]$", key, re.DOTALL
-    )
-    if m:
-        inner = _crate_decl(m.group(1))
+    p = datatypes.parse(raw)
+    if p.element is not None:
+        inner = _crate_decl(p.element)
         out = {"type": inner["type"] + "_array"}
         if inner.get("children"):
             out["children"] = inner["children"]
         return out
-    m = re.match(r"(varchar|character varying|char|character|bit)\s*\(\s*(\d+)\s*\)$", key)
-    if m:
-        return {"type": _CRATE_NAME[m.group(1)], "length": int(m.group(2))}
-    if re.match(r"numeric\b", key):
-        return {"type": "numeric"}
-    if re.match(r"float_vector\b", key):
-        return {"type": "float_vector"}
-    return {"type": _CRATE_NAME.get(key, key)}
-
-
-def _spark_to_crate(simple: str) -> str:
-    """Spark simpleString -> crate data_type name (fallback for tables
-    without declared DDL — e.g. registered parquet sources)."""
-    m = re.match(r"array<(.+)>$", simple)
-    if m:
-        return _spark_to_crate(m.group(1)) + "_array"
-    if simple.startswith("decimal"):
-        return "numeric"
-    if simple.startswith("struct"):
-        return "object"
-    return {
-        "string": "text", "int": "integer", "tinyint": "byte",
-        "float": "real", "double": "double precision",
-        "timestamp": "timestamp with time zone",
-        "timestamp_ntz": "timestamp without time zone",
-        "map<string,string>": "object",
-        "binary": "text",
-    }.get(simple, simple)
+    out = {"type": p.row.name if p.row else datatypes.name_of(raw.strip().lower())}
+    if p.args and p.row.spark == "string":  # varchar(n), char(n), bit(n)
+        out["length"] = p.args[0]
+    return out
 
 
 def _expand_occ_where(where: str) -> str:
@@ -619,7 +499,7 @@ class SqlDmlRouter:
                 rest,
                 flags=re.IGNORECASE,
             )
-            ctype = _map_type(rest)
+            ctype = datatypes.spark_type(rest)
             if not ctype:
                 if cname in generated:
                     # typeless generated column (generated-columns.rst:
@@ -648,7 +528,7 @@ class SqlDmlRouter:
             cols[cols.index(cname)] = f"{cname} {dt}"
             for cc in crate_cols:
                 if cc["name"] == cname and cc["type"] is None:
-                    cc["type"] = _spark_to_crate(dt)
+                    cc["type"] = datatypes.name_of(dt)
 
         partitioned: list[str] = []
         pm = re.search(r"PARTITIONED\s+BY\s*\(([^)]*)\)", tail, re.IGNORECASE)
@@ -715,7 +595,7 @@ class SqlDmlRouter:
             path,
             schema_ddl,
             crate_columns=[
-                {"name": f.name, "type": _spark_to_crate(f.dataType.simpleString())}
+                {"name": f.name, "type": datatypes.name_of(f.dataType.simpleString())}
                 for f in src.schema.fields
             ],
         )
@@ -862,7 +742,7 @@ class SqlDmlRouter:
                 )
                 table._save_meta()
             else:
-                table.schema_ddl = f"{table.schema_ddl}, {col} {_map_type(raw_type)}"
+                table.schema_ddl = f"{table.schema_ddl}, {col} {datatypes.spark_type(raw_type)}"
                 table.crate_columns.append({"name": col, **_crate_decl(raw_type)})
                 table._save_meta()
         elif m.group(4):  # DROP COLUMN
@@ -1045,12 +925,17 @@ class SqlDmlRouter:
             policy = (table.settings.get("column_policy") or "strict").lower()
             if policy != "dynamic":
                 raise ValueError(f"Column {unknown[0]} unknown")
-            widen = {"int": "bigint", "smallint": "bigint", "tinyint": "bigint",
-                     "float": "double", "void": "string"}
+            # new columns widen: integers to bigint, floats to
+            # double, an all-NULL column to text
             src_types = {f.name: f.dataType.simpleString() for f in src.schema.fields}
             for c in unknown:
                 dt = src_types[c]
-                dt = widen.get(dt, dt)
+                if dt in datatypes.INTEGRAL:
+                    dt = "bigint"
+                elif dt in datatypes.FRACTIONAL:
+                    dt = "double"
+                elif dt == "void":
+                    dt = "string"
                 table.schema_ddl += f", {c} {dt}"
             table._save_meta()
             declared = ddl_schema(table.schema_ddl)

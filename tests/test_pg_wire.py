@@ -227,6 +227,45 @@ def test_wire_auth_password_roundtrip(spark, pg_server):
     ctl.close()
 
 
+def test_extended_protocol_error_sqlstate(pg_server):
+    """Bind errors carry the classified SQLSTATE, as the simple flow's
+    do (42P01 for an unknown table, not a blanket 42601)."""
+    c = MiniPgClient(pg_server)
+    try:
+        sql = b"SELECT * FROM no_such_table WHERE x = $1\x00"
+        body = b"\x00" + sql + struct.pack("!H", 0)
+        c.sock.sendall(b"P" + struct.pack("!I", len(body) + 4) + body)
+        val = b"1"
+        body = (
+            b"\x00" + b"\x00" + struct.pack("!H", 0)
+            + struct.pack("!H", 1) + struct.pack("!i", len(val)) + val
+            + struct.pack("!H", 0)
+        )
+        c.sock.sendall(b"B" + struct.pack("!I", len(body) + 4) + body)
+        c.sock.sendall(b"S" + struct.pack("!I", 4))
+        errors = [
+            dict((chr(f[0]), f[1:].decode()) for f in payload.split(b"\x00") if f)
+            for tag, payload in c._drain_until_ready()
+            if tag == b"E"
+        ]
+        assert [e["C"] for e in errors] == ["42P01"]
+    finally:
+        c.close()
+
+
+def test_array_text_quotes_elements_like_array_out():
+    """Array elements holding a delimiter, brace, quote, backslash or
+    whitespace, spelling NULL, or empty are double-quoted with quote
+    and backslash escaped; a real NULL stays bare (PG array_out)."""
+    from crate_spark.pg_wire import _text
+
+    got = _text(["a,b", "NULL", None, "x y", 'q"t', ""])
+    assert got == '{"a,b","NULL",NULL,"x y","q\\"t",""}'
+    assert _text([1, 2]) == "{1,2}"
+    assert _text([["a b"], ["c"]]) == '{{"a b"},{c}}'
+    assert _text(["back\\slash"]) == '{"back\\\\slash"}'
+
+
 def test_sqlstate_mapping():
     """Error classes map to the PG SQLSTATEs the reference reports."""
     from crate_spark.pg_wire import _sqlstate_of

@@ -5,11 +5,18 @@ semantics (interval comparisons, nested arrays, dynamic objects,
 
 from __future__ import annotations
 
+import ast
+import pathlib
+import re
+import struct
+
 import pytest
 from pyspark.sql import functions as F
 
+from crate_spark import datatypes
 from crate_spark.dml import CrateTable
 from crate_spark.functions import ip_in_cidr
+from crate_spark.pg_wire import _PgHandler
 
 
 def one(spark, expr_sql: str):
@@ -150,3 +157,198 @@ def test_create_table_reference_type_names(spark, tmp_path):
         "SELECT round(distance(g, 'POINT (13.405 52.52)'), 0) AS m FROM typed"
     ).collect()[0]["m"]
     assert 0 <= d < 5000
+
+
+# -- one type table: every surface answers the same ------------------------
+
+_SPELLED = [t for t in datatypes.TYPES if t.spellings]
+
+
+@pytest.fixture(scope="module")
+def tsess(spark, tmp_path_factory):
+    from crate_spark.engine import CrateSession
+
+    return CrateSession(
+        spark, None, storage_dir=str(tmp_path_factory.mktemp("type_table"))
+    )
+
+
+def _wire_oids(df) -> dict[str, int]:
+    """Column -> type OID as the pg-wire RowDescription sends it."""
+    desc = _PgHandler._row_description(df.schema.fields)
+    out, off = {}, 2
+    for _ in range(struct.unpack("!H", desc[:2])[0]):
+        end = desc.index(b"\x00", off)
+        out[desc[off:end].decode()] = struct.unpack("!IHIhih", desc[end + 1 : end + 19])[2]
+        off = end + 19
+    return out
+
+
+def _catalog(sess, table: str) -> tuple[dict, dict]:
+    """Column -> information_schema data_type, column -> atttypid."""
+    names = {
+        r[0]: r[1]
+        for r in sess.execute(
+            "SELECT column_name, data_type FROM information_schema.columns "
+            f"WHERE table_name = '{table}'"
+        ).collect()
+    }
+    oids = {
+        r[0]: r[1]
+        for r in sess.execute(
+            "SELECT a.attname, a.atttypid FROM pg_catalog.pg_attribute a "
+            "JOIN pg_catalog.pg_class c ON a.attrelid = c.oid "
+            f"WHERE c.relname = '{table}'"
+        ).collect()
+    }
+    return names, oids
+
+
+def _pg_type_oids(sess) -> set[int]:
+    return {r[0] for r in sess.execute("SELECT oid FROM pg_catalog.pg_type").collect()}
+
+
+def _tname(prefix: str, row) -> str:
+    return prefix + re.sub(r"\W", "_", row.name)
+
+
+@pytest.mark.parametrize("row", _SPELLED, ids=lambda t: t.name)
+def test_every_spelling_agrees_across_surfaces(tsess, row):
+    """DDL accepts each spelling and stores the row's Spark type; the
+    declared column keeps the row's name in information_schema; its
+    pg_attribute OID equals the RowDescription OID and is a pg_type
+    row; a cast to the spelling yields the row's cast type."""
+    table = _tname("decl_", row)
+    cols = ", ".join(f"c{i} {s}" for i, s in enumerate(row.spellings))
+    tsess.execute(f"CREATE TABLE {table} ({cols})")
+    df = tsess.execute(f"SELECT * FROM {table}")
+    stored = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+    assert stored == {f"c{i}": row.spark for i in range(len(row.spellings))}
+    names, oids = _catalog(tsess, table)
+    assert set(names.values()) == {row.name}, names
+    wire = _wire_oids(df)
+    assert oids == wire, (oids, wire)
+    assert set(wire.values()) <= _pg_type_oids(tsess)
+    # a non-canonical row (ip, json, geo_point, ...) reports its Spark
+    # type's OID: the same as the canonical row for that Spark type
+    assert set(wire.values()) == {datatypes.pg_oid(row.spark)}
+    cast_to = (row.cast or row.spark).lower()
+    for s in row.spellings:
+        got = tsess.execute(f"SELECT CAST(NULL AS {s}) AS v").schema[0].dataType
+        assert got.simpleString() == cast_to, s
+
+
+_CANONICAL = [t for t in _SPELLED if datatypes.BY_SPARK.get(t.spark) is t]
+
+
+@pytest.mark.parametrize("row", _CANONICAL, ids=lambda t: t.name)
+def test_canonical_row_names_parquet_and_pg_typeof_alike(tsess, spark, tmp_path, row):
+    """A parquet column of the row's Spark type gets the same
+    information_schema name as a declared column; pg_typeof and SHOW
+    CREATE TABLE agree, and HTTP col_types reports the row's id."""
+    from crate_spark.http_sql import execute_request
+
+    path = str(tmp_path / "p.parquet")
+    spark.sql(f"SELECT CAST(NULL AS {row.spark}) AS x").write.parquet(path)
+    table = _tname("pq_", row)
+    tsess.register(table, spark.read.parquet(path))
+    names, oids = _catalog(tsess, table)
+    assert names == {"x": row.name}
+    got = tsess.execute(f"SELECT pg_typeof(x) AS t FROM {table}").collect()[0]["t"]
+    assert got == row.name
+    assert oids == _wire_oids(tsess.execute(f"SELECT x FROM {table}"))
+    ddl = tsess.execute(f"SHOW CREATE TABLE {table}").collect()[0][0]
+    assert f'"x" {row.name.upper()}' in ddl
+    resp = execute_request(tsess, {"stmt": f"SELECT x FROM {table}"}, types=True)
+    assert resp["col_types"] == [row.http]
+
+
+def test_result_types_wire_and_catalog_oids(tsess, spark, tmp_path):
+    """Arrays report their element's typarray; both Spark timestamps
+    keep 1114; types with no PG counterpart report 25 (text) — the
+    same on the wire and in pg_attribute."""
+    want = {
+        "a_int": ("array<int>", 1007), "a_text": ("array<string>", 1009),
+        "a_dbl": ("array<double>", 1022), "a_big": ("array<bigint>", 1016),
+        "ts": ("timestamp", 1114), "ts_ntz": ("timestamp_ntz", 1114),
+        "b": ("tinyint", 18), "m": ("map<string,string>", 25),
+        "st": ("struct<a:int>", 25), "bin": ("binary", 25),
+        "iv": (datatypes.BY_NAME["interval"].spark, 25),
+    }
+    path = str(tmp_path / "r.parquet")
+    spark.sql(
+        "SELECT " + ", ".join(f"CAST(NULL AS {t}) AS {c}" for c, (t, _) in want.items())
+    ).write.parquet(path)
+    tsess.register("result_types", spark.read.parquet(path))
+    _, oids = _catalog(tsess, "result_types")
+    wire = _wire_oids(tsess.execute("SELECT * FROM result_types"))
+    assert wire == oids == {c: oid for c, (_, oid) in want.items()}
+
+
+def test_byte_column_has_one_name(tsess, spark, tmp_path):
+    """pg_typeof, a declared tinyint and a parquet tinyint column all
+    say byte (they said "char", tinyint and byte)."""
+    tsess.execute("CREATE TABLE bytes_decl (b tinyint, c byte)")
+    path = str(tmp_path / "b.parquet")
+    spark.sql("SELECT CAST(1 AS TINYINT) AS b").write.parquet(path)
+    tsess.register("bytes_pq", spark.read.parquet(path))
+    names = {
+        (r[0], r[1]): r[2]
+        for r in tsess.execute(
+            "SELECT table_name, column_name, data_type FROM "
+            "information_schema.columns WHERE table_name LIKE 'bytes_%'"
+        ).collect()
+    }
+    assert set(names.values()) == {"byte"}, names
+    typeof = tsess.execute("SELECT pg_typeof(b) AS t FROM bytes_pq").collect()[0]["t"]
+    assert typeof == "byte"
+
+
+def test_pg_aliases_in_ddl(tsess):
+    """int2/int4/int8/float4/float8/bytea declare columns, as they
+    already cast (they failed with UNSUPPORTED_DATATYPE)."""
+    tsess.execute(
+        "CREATE TABLE pg_aliases (a int2, b int4, c int8, d float4, "
+        "e float8, f bytea, g timestamptz)"
+    )
+    got = {
+        f.name: f.dataType.simpleString()
+        for f in tsess.execute("SELECT * FROM pg_aliases").schema.fields
+    }
+    assert got == {
+        "a": "smallint", "b": "int", "c": "bigint", "d": "float",
+        "e": "double", "f": "binary", "g": "timestamp",
+    }
+
+
+# -- guard: no second type map ----------------------------------------------
+
+_PKG = pathlib.Path(__file__).resolve().parent.parent / "crate_spark"
+
+
+def _type_map_literals(root: pathlib.Path) -> list[str]:
+    """Dict and set literals outside datatypes.py that hold 3 or more
+    of the type table's spellings or of its pg_type OIDs."""
+    spellings = set(datatypes.BY_SPELLING)
+    oids = {r[0] for r in datatypes.PG_TYPES}
+    hits = []
+    for path in sorted(root.rglob("*.py")):
+        if path.name == "datatypes.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.Dict):
+                elts = [*node.keys, *node.values]
+            elif isinstance(node, ast.Set):
+                elts = node.elts
+            else:
+                continue
+            consts = [e.value for e in elts if isinstance(e, ast.Constant)]
+            n_spell = len({c for c in consts if isinstance(c, str) and c in spellings})
+            n_oid = len({c for c in consts if type(c) is int and c in oids})
+            if n_spell >= 3 or n_oid >= 3:
+                hits.append(f"{path.relative_to(root.parent)}:{node.lineno}")
+    return hits
+
+
+def test_no_type_map_outside_the_type_table():
+    assert _type_map_literals(_PKG) == []
