@@ -19,6 +19,7 @@ import re
 
 from pyspark.sql import DataFrame
 
+from crate_spark import lexer
 from crate_spark.dml import CrateTable
 from crate_spark.roles import PERMISSIONS, SUPERUSER, RoleStore
 from crate_spark.session import local_frame
@@ -29,11 +30,12 @@ _PRIV_WORD = "|".join(PERMISSIONS)
 
 def _parse_with(body: str) -> dict:
     """WITH (k='v', k2=v2) -> dict (lowercased keys)."""
+    masked, literals = lexer.mask(body)
     out = {}
-    for part in re.split(r",(?=(?:[^']*'[^']*')*[^']*$)", body):
-        m = re.match(r"\s*(\w+)\s*=\s*(.+?)\s*$", part)
+    for part in lexer.split_top(masked):
+        m = re.match(r"(\w+)\s*=\s*(.+)$", part)
         if m:
-            out[m.group(1).lower()] = m.group(2).strip().strip("'\"")
+            out[m.group(1).lower()] = lexer.unquote(lexer.unmask(m.group(2), literals))
     return out
 
 
@@ -88,16 +90,19 @@ def route_admin(session, stmt: str) -> DataFrame | None:
     )
     if m:
         name = m.group(1).strip('"')
-        for item in re.split(r",(?=(?:[^']*'[^']*')*[^']*$)", m.group(2)):
+        masked, literals = lexer.mask(m.group(2))
+        for item in lexer.split_top(masked):
             km = re.match(
-                r"\s*\"?([\w.]+)\"?\s*=\s*(?:'([^']*)'|(NULL))\s*$",
+                r"\"?([\w.]+)\"?\s*=\s*(?:(__LIT_\d+__)|(NULL))$",
                 item,
                 re.IGNORECASE,
             )
             if not km:
-                raise ValueError(f"Cannot parse ALTER setting: {item!r}")
+                raise ValueError(
+                    f"Cannot parse ALTER setting: {lexer.unmask(item, literals)!r}"
+                )
             key = km.group(1).lower()
-            val = None if km.group(3) else km.group(2)
+            val = None if km.group(3) else lexer.unquote(lexer.unmask(km.group(2), literals))
             if key == "password":
                 roles.alter_password(name, val)
             else:

@@ -45,7 +45,7 @@ import itertools
 import re
 import time
 
-from crate_spark import datatypes
+from crate_spark import datatypes, lexer
 
 try:  # recursive patterns (unbounded paren nesting in operands);
     # public PyPI `regex` — fall back to bounded `re` patterns if absent
@@ -233,25 +233,6 @@ _SCHEMA_RE = re.compile(
 # ---------------------------------------------------------------------------
 # crate-only scalar function names -> Spark SQL expression templates
 # ---------------------------------------------------------------------------
-def _split_args(s: str) -> list[str]:
-    """Split a call's argument text at top-level commas."""
-    parts, depth, cur = [], 0, []
-    for ch in s:
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        if ch == "," and depth == 0:
-            parts.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-    tail = "".join(cur).strip()
-    if tail:
-        parts.append(tail)
-    return parts
-
-
 def _mklit(literals: list[str], text: str) -> str:
     """Append an already-Spark-escaped string literal and return its
     mask token — template output must never contain raw quoted text
@@ -1825,7 +1806,7 @@ def _named_struct_entries(text: str) -> dict[str, str] | None:
         t = t[len("to_json(") : -1].strip()
     if not (t.startswith("named_struct(") and t.endswith(")")):
         return None
-    args = _split_args(t[len("named_struct(") : -1])
+    args = lexer.split_top(t[len("named_struct(") : -1])
     if len(args) % 2:
         return None
     return {args[i]: args[i + 1] for i in range(0, len(args), 2)}
@@ -1847,7 +1828,7 @@ def _substring_from_for_commas(sql: str) -> str:
         if not m:
             out.append(sql[i:])
             return "".join(out)
-        close = _find_close(sql, m.end() - 1)
+        close = lexer.find_close(sql, m.end() - 1)
         if close < 0:
             out.append(sql[i:])
             return "".join(out)
@@ -1937,7 +1918,7 @@ def _lit_array_depth(s: str) -> int:
         inner = s[6:-1].strip()
         if not inner:
             return 1
-        depths = [_lit_array_depth(x) for x in _split_args(inner)]
+        depths = [_lit_array_depth(x) for x in lexer.split_top(inner)]
         return 1 + max(depths)
     m = re.match(r"CAST\s*\(\s*array\s*\(\s*\)\s*AS\s+(.+)\)$", s,
                  re.IGNORECASE | re.DOTALL)
@@ -1995,17 +1976,12 @@ def _rewrite_crate_fns(sql: str, literals: list[str]) -> str:
     m = _FN_CALL_RE.search(sql)
     if not m:
         return sql
-    depth, i = 1, m.end()
-    while i < len(sql) and depth:
-        if sql[i] == "(":
-            depth += 1
-        elif sql[i] == ")":
-            depth -= 1
-        i += 1
-    if depth:
+    close = lexer.find_close(sql, m.end() - 1)
+    if close < 0:
         return sql  # unbalanced parens: bail untouched
+    i = close + 1
     inner = _rewrite_crate_fns(sql[m.end() : i - 1], literals)
-    out = _FN_TEMPLATES[m.group(1).lower()](_split_args(inner), literals)
+    out = _FN_TEMPLATES[m.group(1).lower()](lexer.split_top(inner), literals)
     if out is None:  # unsupported arity: keep the call, args rewritten
         out = sql[m.start() : m.end()] + inner + ")"
     return sql[: m.start()] + out + _rewrite_crate_fns(sql[i:], literals)
@@ -2080,8 +2056,6 @@ def _rewrite_order_by(sql: str) -> str:
     return "".join(out)
 
 
-_LIT_RE = re.compile(r"'(?:[^']|'')*'")
-
 #: innermost object literal ``{k = v, ...}`` (AstBuilder objectLiteral;
 #: docs/general/ddl/data-types: OBJECT literals). Keys are identifiers;
 #: values are arbitrary expressions without nested braces (nesting is
@@ -2154,7 +2128,7 @@ def _struct_literal_subscripts(sql: str, literals: list[str]) -> str:
         if j < 0:
             out.append(sql[i:])
             return "".join(out)
-        close = _find_close(sql, j + len("to_json"))
+        close = lexer.find_close(sql, j + len("to_json"))
         if close < 0:
             out.append(sql[i:])
             return "".join(out)
@@ -2537,11 +2511,11 @@ def _struct_array_literal_subscripts(sql: str, literals: list[str]) -> str:
         if j < 0:
             out.append(sql[i:])
             return "".join(out)
-        close = _find_close(sql, j + len("array"))
+        close = lexer.find_close(sql, j + len("array"))
         if close < 0:
             out.append(sql[i:])
             return "".join(out)
-        args = _split_args(sql[j + len("array(") : close])
+        args = lexer.split_top(sql[j + len("array(") : close])
         entries = [_named_struct_entries(x) for x in args]
         k = close + 1
         while k < len(sql) and sql[k].isspace():
@@ -2601,7 +2575,7 @@ def _map_cast_as_types(sql: str) -> str:
         if not m:
             return sql
         open_idx = pos + m.end() - 1
-        close = _find_close(sql, open_idx)
+        close = lexer.find_close(sql, open_idx)
         if close < 0:
             return sql
         inner = sql[open_idx + 1 : close]
@@ -2629,19 +2603,6 @@ def _map_cast_as_types(sql: str) -> str:
     return sql
 
 
-def _find_close(s: str, open_idx: int) -> int:
-    """Index of the ')' matching s[open_idx] == '('; -1 if unbalanced."""
-    depth = 0
-    for i in range(open_idx, len(s)):
-        if s[i] == "(":
-            depth += 1
-        elif s[i] == ")":
-            depth -= 1
-            if depth == 0:
-                return i
-    return -1
-
-
 def _rewrite_array_subquery(sql: str) -> str:
     """``ARRAY(SELECT expr FROM ... [ORDER BY o [DESC]] [LIMIT n])``
     (reference ``expression/scalar/arithmetic/ArrayFunction`` subquery
@@ -2653,7 +2614,7 @@ def _rewrite_array_subquery(sql: str) -> str:
     if not m:
         return sql
     open_idx = sql.index("(", m.start())
-    close = _find_close(sql, open_idx)
+    close = lexer.find_close(sql, open_idx)
     if close < 0:
         return sql
     inner = sql[open_idx + 1 : close]
@@ -2724,16 +2685,11 @@ def _rewrite_unnest_tvf(sql: str) -> str:
             return "".join(out)
         start = i + m.start()
         open_idx = i + m.end() - 1
-        depth, j = 1, open_idx + 1
-        while j < len(sql) and depth:
-            if sql[j] == "(":
-                depth += 1
-            elif sql[j] == ")":
-                depth -= 1
-            j += 1
-        if depth:  # unbalanced: bail
+        close = lexer.find_close(sql, open_idx)
+        if close < 0:  # unbalanced: bail
             out.append(sql[i:])
             return "".join(out)
+        j = close + 1
         inner = sql[open_idx + 1 : j - 1]
         # top-level comma => multi-arg zip form
         d = 0
@@ -2915,7 +2871,7 @@ def _rewrite_select_srfs(sql: str, literals: list[str]) -> str:
             if not mm:
                 break
             open_idx = scan + mm.end() - 1
-            close = _find_close(sql, open_idx)
+            close = lexer.find_close(sql, open_idx)
             if close < 0:
                 break
             args.append(sql[open_idx + 1 : close])
@@ -2946,7 +2902,7 @@ def _rewrite_select_srfs(sql: str, literals: list[str]) -> str:
             out.append(sql)
             return "".join(out)
         fn = m.group(1).lower()
-        close = _find_close(sql, m.end() - 1)
+        close = lexer.find_close(sql, m.end() - 1)
         if close < 0:
             out.append(sql)
             return "".join(out)
@@ -2955,7 +2911,7 @@ def _rewrite_select_srfs(sql: str, literals: list[str]) -> str:
             sql = sql[close + 1 :]
             continue
         after = sql[close + 1 :].lstrip()
-        a = _split_args(sql[m.end() : close])
+        a = lexer.split_top(sql[m.end() : close])
         if fn == "_pg_expandarray":
             # projection form yields ONE record column (x, n) per row
             body = (
@@ -2992,10 +2948,10 @@ def _rewrite_series_tvf(sql: str, literals: list[str]) -> str:
         return sql
     fn = m.group(2).lower()
     open_idx = m.end() - 1
-    close = _find_close(sql, open_idx)
+    close = lexer.find_close(sql, open_idx)
     if close < 0:
         return sql
-    a = _split_args(sql[open_idx + 1 : close])
+    a = lexer.split_top(sql[open_idx + 1 : close])
     # optional alias (with optional column list) after the call
     tail = sql[close + 1 :]
     am = re.match(
@@ -3272,15 +3228,10 @@ def _extract_over_age(sql: str) -> str:
             return sql
         call_start = m.end()
         open_paren = sql.index("(", call_start)
-        depth, i = 1, open_paren + 1
-        while i < len(sql) and depth:
-            if sql[i] == "(":
-                depth += 1
-            elif sql[i] == ")":
-                depth -= 1
-            i += 1
-        if depth:
+        close = lexer.find_close(sql, open_paren)
+        if close < 0:
             return sql
+        i = close + 1
         S = "(" + sql[call_start:i] + ")"
         j = i
         closers = (2 if m.group(2) else 1)
@@ -3546,10 +3497,10 @@ def rewrite(
 ) -> str:
     """Apply all crate-ism rewrites to one statement.
 
-    String literals are masked as identifier-shaped placeholders first
-    so the operator regexes can never match text INSIDE a literal
-    (e.g. ``'a::b'`` must survive untouched), while a literal can
-    still BE an operand (``'5'::int``).
+    String literals are masked (``lexer.mask``) as identifier-shaped
+    tokens first so the operator regexes can never match text INSIDE
+    a literal (e.g. ``'a::b'`` must survive untouched), while a
+    literal can still BE an operand (``'5'::int``).
 
     ``string_object_columns`` names columns whose OBJECT content is
     stored as a JSON string (the engine's dynamic-object
@@ -3557,121 +3508,7 @@ def rewrite(
     rewrite to ``get_json_object(col, '$.a.b')``. Subscripts on any
     other base are left to Spark's native map/struct extraction.
     """
-    literals: list[str] = []
-
-    # PG escape-string literals E'...' (string-literal.rst): decode
-    # the C-style escapes into a plain literal before masking —
-    # reference semantics per Literals.replaceEscapedChars
-    # (libs/sql-parser Literals.java:44-140): an UNRECOGNIZED escape
-    # drops the backslash and keeps the char (E'Te\%tch' is 'Te%tch',
-    # so LIKE sees the % wildcard — LikeOperatorTest
-    # test_wildcard_escaped_in_c_style_string); octal starts 0-3 (\4x
-    # falls to the drop rule); \x without hex digits emits 'x';
-    # malformed \u/\U rejects like the reference lexer.
-    def _e_lit(m: re.Match) -> str:
-        body, out, i = m.group(1), [], 0
-        esc = {"b": "\b", "f": "\f", "n": "\n", "r": "\r", "t": "\t"}
-        while i < len(body):
-            c = body[i]
-            if c == "\\" and i + 1 < len(body):
-                n = body[i + 1]
-                if n in esc:
-                    out.append(esc[n])
-                    i += 2
-                    continue
-                if n in ("\\", "'"):
-                    out.append(n)
-                    i += 2
-                    continue
-                if n in ("u", "U"):
-                    width = 4 if n == "u" else 8
-                    u = re.match(
-                        r"[0-9A-Fa-f]{%d}" % width, body[i + 2 :]
-                    )
-                    if not u:
-                        raise ValueError(
-                            "Invalid Unicode escape in escaped string "
-                            "literal (Literals.java ESCAPED_UNICODE)"
-                        )
-                    out.append(chr(int(u.group(0), 16)))
-                    i += 2 + width
-                    continue
-                if n == "x":
-                    x = re.match(r"[0-9A-Fa-f]{1,2}", body[i + 2 :])
-                    if x:
-                        out.append(chr(int(x.group(0), 16)))
-                        i += 2 + len(x.group(0))
-                    else:
-                        # hex sequence unmatched: original char
-                        out.append("x")
-                        i += 2
-                    continue
-                o = re.match(r"[0-3][0-7]{0,2}", body[i + 1 :])
-                if o:
-                    out.append(chr(int(o.group(0), 8)))
-                    i += 1 + len(o.group(0))
-                    continue
-                # unrecognized escape: IGNORE the backslash (drop it),
-                # next char re-processes normally
-                i += 1
-                continue
-            if c == "'" and i + 1 < len(body) and body[i + 1] == "'":
-                # doubled quote inside the raw body is ONE quote char
-                out.append("'")
-                i += 2
-                continue
-            out.append(c)
-            i += 1
-        return "'" + "".join(out).replace("'", "''") + "'"
-
-    # the E must start a token — right after a quote it's the tail of
-    # an ordinary string literal ('E'), not an escape-string prefix
-    sql = re.sub(r"(?<!['\w])[Ee]'((?:[^'\\]|''|\\.)*)'", _e_lit, sql)
-
-    # dollar-quoted strings $tag$...$tag$ (lexical-structure.rst:26-44;
-    # no nesting) -> ordinary literals. Single left-to-right scan so a
-    # $$ INSIDE an ordinary '...' literal never opens a dollar quote.
-    if "$" in sql:
-        parts, i, n = [], 0, len(sql)
-        while i < n:
-            c = sql[i]
-            if c == "'":
-                j = i + 1
-                while j < n:
-                    if sql[j] == "'":
-                        if j + 1 < n and sql[j + 1] == "'":
-                            j += 2
-                            continue
-                        break
-                    j += 1
-                parts.append(sql[i : j + 1])
-                i = j + 1
-            elif c == '"':
-                j = sql.find('"', i + 1)
-                j = n - 1 if j < 0 else j
-                parts.append(sql[i : j + 1])
-                i = j + 1
-            elif c == "$":
-                dm = re.match(r"\$(\w*)\$", sql[i:])
-                if dm:
-                    close = sql.find(dm.group(0), i + dm.end())
-                    if close >= 0:
-                        body = sql[i + dm.end() : close]
-                        parts.append("'" + body.replace("'", "''") + "'")
-                        i = close + dm.end()
-                        continue
-                parts.append(c)
-                i += 1
-            else:
-                parts.append(c)
-                i += 1
-        sql = "".join(parts)
-
-    def _mask(m: re.Match) -> str:
-        literals.append(m.group(0))
-        return f"__LIT_{len(literals) - 1}__"
-
-    sql = _LIT_RE.sub(_mask, sql)
+    sql, literals = lexer.mask(sql)
     n_input_lits = len(literals)
 
     # LIKE/ILIKE ... ESCAPE '' — the reference DISABLES escaping
@@ -4117,16 +3954,11 @@ def rewrite(
         mso = re.search(r"\bsubscript_obj\s*\(", sql, re.IGNORECASE)
         if not mso:
             break
-        depth, i = 1, mso.end()
-        while i < len(sql) and depth:
-            if sql[i] == "(":
-                depth += 1
-            elif sql[i] == ")":
-                depth -= 1
-            i += 1
-        if depth:
+        close = lexer.find_close(sql, mso.end() - 1)
+        if close < 0:
             break
-        args = _split_args(sql[mso.end() : i - 1])
+        i = close + 1
+        args = lexer.split_top(sql[mso.end() : i - 1])
         if len(args) < 2:
             break
         chain = "(" + args[0].strip() + ")" + "".join(
@@ -4517,7 +4349,7 @@ def rewrite(
             # match is anchored to `FROM|JOIN <relation> [AS] rx`, or —
             # for a subquery's `) [AS] rx` — to the closing paren of a
             # paren group that itself OPENS at FROM/JOIN (scan via
-            # _find_close; ADVICE r7: a trailing-context guess misses
+            # find_close; ADVICE r7: a trailing-context guess misses
             # the comma-join position and a bare `,` lookahead would
             # re-admit SELECT-list column aliases).
             # Relation positions were already stripped above.
@@ -4529,7 +4361,7 @@ def rewrite(
             )
             if not alias_decl:
                 for fm in re.finditer(r"\b(?:FROM|JOIN)\s*\(", sql, re.IGNORECASE):
-                    close = _find_close(sql, fm.end() - 1)
+                    close = lexer.find_close(sql, fm.end() - 1)
                     if close >= 0 and re.match(
                         rf"\s*(?:AS\s+)?{sch_pat}(?![\w.(])",
                         sql[close + 1 :],
@@ -4560,7 +4392,7 @@ def rewrite(
         m = _PG_TYPEOF_RE.search(sql)
         if not m:
             break
-        close = _find_close(sql, m.end() - 1)
+        close = lexer.find_close(sql, m.end() - 1)
         if close < 0:
             break
         t = f"typeof({sql[m.end():close]})"
@@ -4715,18 +4547,15 @@ def rewrite(
     )
 
     sql = _rewrite_order_by(sql)
-    def _unmask(m: re.Match) -> str:
-        i = int(m.group(1))
-        # PG/CrateDB string literals are standard-conforming: backslash
-        # is a literal character ('\d' stays '\d'). Spark's parser
-        # treats it as an escape, so double it at unmask time. Literals
-        # appended by rewrite templates are already Spark-escaped and
-        # emit verbatim.
-        return literals[i].replace("\\", "\\\\") if i < n_input_lits else literals[i]
-
-    # single pass: text already put back is never rescanned, so a
-    # literal that reads like a mask token survives
-    return re.sub(r"__LIT_(\d+)__", _unmask, sql)
+    # PG/CrateDB string literals are standard-conforming: backslash is
+    # a literal character ('\d' stays '\d'). Spark's parser treats it
+    # as an escape, so input literals double it. Literals appended by
+    # rewrite templates are already Spark-escaped and emit verbatim.
+    return lexer.unmask(
+        sql,
+        [lit.replace("\\", "\\\\") for lit in literals[:n_input_lits]]
+        + literals[n_input_lits:],
+    )
 
 
 #: system doc columns every table exposes in the reference
@@ -4775,13 +4604,7 @@ def rewrite_sys_columns(sql: str) -> str:
     String literals are masked first so a ``_score`` or ``_id``
     INSIDE a literal is never rewritten into the data.
     """
-    lits: list[str] = []
-
-    def _mask(m: re.Match) -> str:
-        lits.append(m.group(0))
-        return f"__SYSLIT{len(lits) - 1}__"
-
-    sql = re.sub(r"'(?:[^']|'')*'", _mask, sql)
+    sql, lits = lexer.mask(sql)
     # qualified references (t._score, nation._id) read the same system
     # column — the reference resolves alias-qualified sys columns like
     # any column; storage is single-relation here so the qualifier
@@ -4804,8 +4627,4 @@ def rewrite_sys_columns(sql: str) -> str:
         out.append(f"{expr} AS {m.group(1)}" if bare_item else expr)
         last = m.end()
     out.append(sql[last:])
-    # single-pass unmask: replacements are never rescanned, so a
-    # literal whose DATA contains a placeholder-shaped token survives
-    return re.sub(
-        r"__SYSLIT(\d+)__", lambda m: lits[int(m.group(1))], "".join(out)
-    )
+    return lexer.unmask("".join(out), lits)

@@ -29,7 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from crate_spark import datatypes
-from crate_spark.dialect import _LIT_RE, rewrite, rewrite_sys_columns
+from crate_spark import lexer
+from crate_spark.dialect import rewrite, rewrite_sys_columns
 from crate_spark.session import (
     TABLES, apply_runtime_confs, ddl_schema, load_tables, local_frame,
 )
@@ -54,7 +55,7 @@ def _sql_literal(v) -> str:
         return "array(" + ", ".join(_sql_literal(x) for x in v) + ")"
     if isinstance(v, bytes):
         return f"unhex('{v.hex()}')"
-    return "'" + str(v).replace("'", "''") + "'"
+    return lexer.quote(str(v))
 
 
 #: the reference's fixed system-catalog inventory as listed by
@@ -1257,7 +1258,7 @@ class CrateSession:
         user-defined-functions.rst)."""
         if not self._udfs:
             return sql
-        parts = re.split(r"('(?:[^']|'')*')", sql)  # literals untouched
+        sql, lits = lexer.mask(sql)
         # unquoted identifiers fold to lowercase (reference parser),
         # and UDF schemas are stored lowercased — compare folded
         sp = [s.lower() for s in self._search_path()]
@@ -1276,29 +1277,26 @@ class CrateSession:
                 continue
             if nm not in by_name or _rank(sch) < _rank(by_name[nm]):
                 by_name[nm] = sch
-        for i in range(0, len(parts), 2):
-            seg = parts[i]
-            # call sites may quote the name (`"Camel"(x)` — quoted
-            # identifiers keep case in the reference; the registry is
-            # lowercase-keyed, so resolution here is case-insensitive
-            # either way) — consume the quotes/backticks with the name
-            for sch, nm in self._udfs:
-                seg = re.sub(
-                    rf'(?<![\w.])"?{re.escape(sch)}"?\s*\.\s*'
-                    rf'[`"]?{re.escape(nm)}[`"]?\s*\(',
-                    self._udf_spark_name(sch, nm) + "(",
-                    seg,
-                    flags=re.IGNORECASE,
-                )
-            for nm, sch in by_name.items():
-                seg = re.sub(
-                    rf'(?<![\w.`"])[`"]?{re.escape(nm)}[`"]?\s*\(',
-                    self._udf_spark_name(sch, nm) + "(",
-                    seg,
-                    flags=re.IGNORECASE,
-                )
-            parts[i] = seg
-        return "".join(parts)
+        # call sites may quote the name (`"Camel"(x)` — quoted
+        # identifiers keep case in the reference; the registry is
+        # lowercase-keyed, so resolution here is case-insensitive
+        # either way) — consume the quotes/backticks with the name
+        for sch, nm in self._udfs:
+            sql = re.sub(
+                rf'(?<![\w.])"?{re.escape(sch)}"?\s*\.\s*'
+                rf'[`"]?{re.escape(nm)}[`"]?\s*\(',
+                self._udf_spark_name(sch, nm) + "(",
+                sql,
+                flags=re.IGNORECASE,
+            )
+        for nm, sch in by_name.items():
+            sql = re.sub(
+                rf'(?<![\w.`"])[`"]?{re.escape(nm)}[`"]?\s*\(',
+                self._udf_spark_name(sch, nm) + "(",
+                sql,
+                flags=re.IGNORECASE,
+            )
+        return lexer.unmask(sql, lits)
 
     # -- catalog ---------------------------------------------------------
     def register(self, name: str, df: DataFrame) -> None:
@@ -2142,7 +2140,7 @@ class CrateSession:
             return routed
         # detection/validation on a literal-masked copy: '_score'
         # inside a string literal is data, not a system column
-        _masked = re.sub(r"'(?:[^']|'')*'", "''", stmt)
+        _masked = lexer.mask(stmt)[0]
         # bare OR alias-qualified (t._score) — qualified sys columns
         # resolve like any column in the reference
         has_score = bool(
@@ -2324,29 +2322,31 @@ class CrateSession:
     def _bind_params(self, stmt: str, params: list) -> str:
         """Substitute ``$1``-style (and bare ``?`` positional)
         placeholders with typed SQL literals (Session.bind():403).
-        String literals are masked first so placeholder-shaped text
-        inside them survives."""
-        lits: list[str] = []
+        String literals are masked first and quoted identifiers skipped,
+        so placeholder-shaped text inside them survives; each bound
+        value enters as one more masked literal, so no value is ever
+        scanned as statement text."""
+        masked, lits = lexer.mask(stmt)
+        n_qmarks = 0
 
-        def _mask(m: re.Match) -> str:
-            lits.append(m.group(0))
-            return f"__PLIT_{len(lits) - 1}__"
-
-        masked = _LIT_RE.sub(_mask, stmt)
-
-        def _repl_dollar(m: re.Match) -> str:
-            i = int(m.group(1)) - 1
+        def _bind(m: re.Match) -> str:
+            nonlocal n_qmarks
+            if m.group("ident"):
+                return m.group(0)
+            if m.group("n"):
+                i, name = int(m.group("n")) - 1, m.group(0)
+            else:
+                i, name = n_qmarks, f"? #{n_qmarks + 1}"
+                n_qmarks += 1
             if not 0 <= i < len(params):
-                raise ValueError(f"no value bound for placeholder ${m.group(1)}")
-            return _sql_literal(params[i])
+                raise ValueError(f"no value bound for placeholder {name}")
+            lits.append(_sql_literal(params[i]))
+            return f"__LIT_{len(lits) - 1}__"
 
-        masked = re.sub(r"\$(\d+)", _repl_dollar, masked)
-        if "?" in masked:
-            it = iter(params)
-            masked = re.sub(r"\?", lambda _m: _sql_literal(next(it)), masked)
-        for i, lit in enumerate(lits):
-            masked = masked.replace(f"__PLIT_{i}__", lit)
-        return masked
+        masked = re.sub(
+            rf"(?P<ident>{lexer.QUOTED_IDENT})|\$(?P<n>\d+)|\?", _bind, masked
+        )
+        return lexer.unmask(masked, lits)
 
     def execute_bulk(self, sql: str, bulk_params: list[list]) -> list:
         """Bulk execution (Session.bulkExec:717): one statement, many
@@ -2630,8 +2630,6 @@ class CrateSession:
         pandas Series (Arrow-batched, ~10-100x faster — the right
         choice at scale when a built-in genuinely can't express it).
         """
-        from crate_spark.sql_dml import _split_top
-
         schema = (schema or self._search_path()[0]).lower()
         if schema in ("sys", "information_schema"):
             # user-defined-functions.rst: pg_catalog is allowed for PG
@@ -2715,14 +2713,14 @@ class CrateSession:
             # binding; symmetric_point in user-defined-functions.rst)
             specs = [
                 ["__arg"] + _sig_item_type(a).split()
-                for a in _split_top(args)
+                for a in lexer.split_top(args)
                 if a.strip()
             ]
             kind = "row"
         else:
             specs = [
                 [p.strip('"') for p in a.strip().split()]
-                for a in _split_top(args)
+                for a in lexer.split_top(args)
                 if a.strip()
             ]
             arg_names = [s[0] for s in specs]
@@ -2889,8 +2887,6 @@ class CrateSession:
         (drop-function.rst): with an argument list, drop exactly that
         overload; without one, drop every overload of the name. The
         mangled registration means Spark builtins are never touched."""
-        from crate_spark.sql_dml import _split_top
-
         schema, _, name = qname.rpartition(".")
         schema = (schema or self._search_path()[0]).lower()
         key = (schema, name.strip('`"').lower())
@@ -2903,7 +2899,7 @@ class CrateSession:
         if argspec is not None:
             sig = tuple(
                 datatypes.spark_type(_sig_item_type(a))
-                for a in _split_top(argspec)
+                for a in lexer.split_top(argspec)
                 if a.strip()
             )
             if sig not in overloads:
@@ -3021,30 +3017,18 @@ def _parse_setting_value(v: str):
         return False
     if re.fullmatch(r"-?\d+", v):
         return int(v)
-    return v.strip("'\"")
+    return lexer.unquote(v)
 
 
 def _parse_global_assignments(body: str) -> list[tuple[str, object]]:
     """``k = v, k2 = {a = 1, b = 2}`` -> [(k, v), (k2.a, 1), (k2.b, 2)]
     — the SET GLOBAL assignment grammar incl. nested-object values
     (runtime-config.rst:53-57)."""
-    items, depth, buf = [], 0, ""
-    for ch in body:
-        if ch in "{(":
-            depth += 1
-        elif ch in "})":
-            depth -= 1
-        if ch == "," and depth == 0:
-            items.append(buf)
-            buf = ""
-        else:
-            buf += ch
-    if buf.strip():
-        items.append(buf)
+    masked, literals = lexer.mask(body)
     out: list[tuple[str, object]] = []
-    for item in items:
+    for item in lexer.split_top(masked):
         k, _, v = item.partition("=")
-        k, v = k.strip().strip('"'), v.strip()
+        k, v = k.strip().strip('"'), lexer.unmask(v.strip(), literals)
         if v.startswith("{") and v.endswith("}"):
             for sk, sv in _parse_global_assignments(v[1:-1]):
                 out.append((f"{k}.{sk}", sv))

@@ -23,6 +23,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
+from crate_spark import lexer
 from crate_spark.session import local_frame
 
 
@@ -51,12 +52,14 @@ def parse_options(body: str | None) -> dict:
     out: dict = {}
     if not body:
         return out
-    for part in re.split(r",(?=(?:[^']*'[^']*')*[^']*$)", body):
-        m = re.match(r"\s*(?:SET\s+|ADD\s+)?\"?(\w+)\"?\s*=?\s*'((?:[^']|'')*)'\s*$", part)
+    masked, literals = lexer.mask(body)
+    for part in lexer.split_top(masked):
+        m = re.match(r"(?:SET\s+|ADD\s+)?\"?(\w+)\"?\s*=?\s*(__LIT_\d+__)$", part)
+        drop = re.match(r"DROP\s+(\w+)$", part, re.IGNORECASE)
         if m:
-            out[m.group(1).lower()] = m.group(2).replace("''", "'")
-        elif re.match(r"\s*DROP\s+(\w+)\s*$", part, re.IGNORECASE):
-            out[re.match(r"\s*DROP\s+(\w+)\s*$", part, re.IGNORECASE).group(1).lower()] = None
+            out[m.group(1).lower()] = lexer.unquote(lexer.unmask(m.group(2), literals))
+        elif drop:
+            out[drop.group(1).lower()] = None
     return out
 
 
@@ -275,10 +278,9 @@ def route_fdw(session, stmt: str):
         schema_ddl = None
         if m.group(3) and m.group(3).strip():
             from crate_spark.datatypes import spark_type
-            from crate_spark.sql_dml import _split_top
 
             cols = []
-            for col in _split_top(m.group(3)):
+            for col in lexer.split_top(m.group(3)):
                 parts = col.strip().split(None, 1)
                 if len(parts) == 2:
                     cols.append(f"{parts[0]} {spark_type(parts[1])}")

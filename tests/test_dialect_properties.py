@@ -15,11 +15,14 @@ bugs unit examples can miss:
 
 from __future__ import annotations
 
+import pathlib
 import re
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from crate_spark import lexer
 from crate_spark.dialect import rewrite
 
 # text that exercises the masking: quotes doubled per SQL, plus the
@@ -390,3 +393,84 @@ def test_mask_token_shaped_literals_survive(spark):
     assert rewrite(sql) == sql
     row = spark.sql(rewrite(sql)).collect()[0]
     assert (row["a"], row["b"], row["c"]) == ("__LIT_1__", "x", "__LIT_0__")
+
+
+# -- the one literal lexer (crate_spark/lexer.py) ---------------------------
+
+#: literal forms whose standard spelling is themselves: mask then
+#: unmask gives the statement back byte-exact
+_STANDARD_FORMS = [
+    "SELECT 'it''s' AS v",
+    "SELECT '' AS v, ''''",
+    "SELECT 'a $$ b' AS v, '$tag$' AS w",
+    "SELECT \"it's\" FROM t WHERE \"a\"\"b\" = 'x''y'",
+    "SELECT '__LIT_1__' AS a, 'x' AS b, '__LIT_0__' AS c",
+    "SELECT B'0101' AS b, 'E' || 'x'",
+    "SELECT 'line\none' AS v, '\\d+' AS w",
+]
+
+#: E'…' and dollar quotes, and the standard literal each stands for
+_DECODED_FORMS = [
+    ("SELECT E'it\\'s' AS v", "SELECT 'it''s' AS v"),
+    ("SELECT E'a''b\\n\\t' AS v", "SELECT 'a''b\n\t' AS v"),
+    ("SELECT E'\\x41\\101\\u0041\\U00000041\\q\\xz' AS v", "SELECT 'AAAAqxz' AS v"),
+    ("SELECT E'Te\\%tch' AS v", "SELECT 'Te%tch' AS v"),
+    ("SELECT e'\\\\' AS v", "SELECT '\\' AS v"),
+    ("SELECT $$a'b$$ AS v", "SELECT 'a''b' AS v"),
+    ("SELECT $t$x$$y$t$ AS v, $$$$ AS w", "SELECT 'x$$y' AS v, '' AS w"),
+    ("SELECT 'a $$ b', $$c\nd$$", "SELECT 'a $$ b', 'c\nd'"),
+    ("SELECT \"$$x\" FROM t WHERE \"E'y\" = $$z$$", "SELECT \"$$x\" FROM t WHERE \"E'y\" = 'z'"),
+]
+
+
+@pytest.mark.parametrize("sql", _STANDARD_FORMS)
+def test_lexer_roundtrips_standard_literals(sql):
+    masked, literals = lexer.mask(sql)
+    assert "'" not in re.sub(lexer.QUOTED_IDENT, "", masked)
+    assert lexer.unmask(masked, literals) == sql
+
+
+@pytest.mark.parametrize("sql,standard", _DECODED_FORMS)
+def test_lexer_decodes_escape_and_dollar_literals(sql, standard):
+    masked, literals = lexer.mask(sql)
+    assert lexer.unmask(masked, literals) == standard
+    assert lexer.mask(standard) == (masked, literals)
+
+
+def test_lexer_rejects_malformed_unicode_escape():
+    with pytest.raises(ValueError, match="Invalid Unicode escape"):
+        lexer.mask("SELECT E'\\u12x' AS v")
+
+
+def test_with_options_and_set_global_lists_split_outside_literals():
+    from crate_spark.admin_sql import _parse_with
+    from crate_spark.engine import _parse_global_assignments
+    from crate_spark.fdw import parse_options
+
+    assert _parse_with("k='a,b', j=E'c\\'d', n = 3") == {"k": "a,b", "j": "c'd", "n": "3"}
+    assert parse_options("k 'a,b', j = 'x''y', DROP z") == {"k": "a,b", "j": "x'y", "z": None}
+    assert _parse_global_assignments("k = 'a,b', o = {x = 1, y = 'c,d'}") == [
+        ("k", "a,b"), ("o.x", 1), ("o.y", "c,d")
+    ]
+
+
+def test_one_literal_scanner():
+    """Only lexer.py decides what a string literal is: no other module
+    under crate_spark/ carries a string-literal regex, a mask token
+    other than __LIT_n__, or its own paren matcher or splitter."""
+    root = pathlib.Path(lexer.__file__).parent
+    forbidden = {
+        "string-literal regex": re.compile(r"\(\?:\[\^'\]\|''\)\*"),
+        "quote-counting lookahead": re.compile(r"\(\?:\[\^'\]\*'\[\^'\]\*'\)\*"),
+        "mask token other than __LIT_": re.compile(r"__[A-Za-z]+LIT"),
+        "second paren matcher or splitter": re.compile(r"def _?(?:find_close|split_top)\b"),
+    }
+    found = [
+        f"{path.relative_to(root)}:{n}: {what}"
+        for path in sorted(root.rglob("*.py"))
+        if path.name != "lexer.py"
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        for what, pat in forbidden.items()
+        if pat.search(line)
+    ]
+    assert not found, found

@@ -364,3 +364,24 @@ def test_copy_from_http_url(spark, tmp_path):
             t.copy_from(f"http://127.0.0.1:{port}/*.csv", format="csv")
     finally:
         httpd.shutdown()
+
+
+def test_mask_shaped_literals_survive_insert_and_update(spark, tmp_path):
+    """A literal whose text reads like a mask token is data: INSERT and
+    UPDATE put it back byte-exact, because unmasking is one pass (it
+    became ''z'' when the unmask loop ran str.replace once per
+    literal). An E'…' value with an escaped quote splits as one SET
+    item, because the DML router masks with the same lexer as the
+    dialect."""
+    from crate_spark.engine import CrateSession
+
+    s = CrateSession(spark, None, storage_dir=str(tmp_path))
+    s.execute("CREATE TABLE m (a text, b text)")
+    s.execute("INSERT INTO m (a, b) VALUES ('__LIT_1__', 'z')")
+    s.execute("INSERT INTO m (a, b) VALUES ('x', 'y')")
+    s.execute("UPDATE m SET a = '__LIT_1__' WHERE b = 'y'")
+    rows = sorted(tuple(r) for r in s.execute("SELECT a, b FROM m").collect())
+    assert rows == [("__LIT_1__", "y"), ("__LIT_1__", "z")]
+    s.execute("UPDATE m SET a = E'it\\'s, ok', b = 'q' WHERE b = 'z'")
+    rows = sorted(tuple(r) for r in s.execute("SELECT a, b FROM m").collect())
+    assert rows == [("__LIT_1__", "y"), ("it's, ok", "q")]

@@ -72,6 +72,17 @@ def test_http_sql_roundtrip(http_session):
         srv.shutdown()
 
 
+def test_http_sql_args_bind_outside_literals(http_session):
+    """``args`` bind only outside literals, and a missing value answers
+    with a message naming the placeholder."""
+    resp = execute_request(
+        http_session, {"stmt": "SELECT $$keep $1$$ AS x, $1 AS y", "args": ["P"]}
+    )
+    assert resp["rows"] == [["keep $1", "P"]]
+    resp = execute_request(http_session, {"stmt": "SELECT ? AS a, ? AS b", "args": [1]})
+    assert "no value bound for placeholder ? #2" in resp["error"]["message"]
+
+
 def test_http_sql_value_serialization(http_session):
     """Timestamps as epoch millis, arrays as JSON arrays — the
     reference's HTTP value mapping."""

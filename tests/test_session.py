@@ -745,6 +745,34 @@ def test_parameter_binding(session):
     assert rows[0]["a"] == "o'brien" and rows[0]["b"] is None and rows[0]["c"] == 3.5
 
 
+def test_parameter_binding_follows_the_lexer(session):
+    """Placeholders bind only outside literals and quoted identifiers,
+    with literals read as the dialect reads them ($$…$$, E'…'), and a
+    bound value never becomes statement text."""
+
+    def row(sql, params):
+        return tuple(session.execute(sql, params=params).collect()[0])
+
+    assert row("SELECT 'a' AS x, $1 AS y", ["__PLIT_0__"]) == ("a", "__PLIT_0__")
+    assert row("SELECT 'a' AS x, $1 AS y", ["__LIT_0__"]) == ("a", "__LIT_0__")
+    assert row("SELECT $$keep $1$$ AS x, $1 AS y", ["P"]) == ("keep $1", "P")
+    assert row("SELECT E'it\\'s $1' AS x, $1 AS y", ["P"]) == ("it's $1", "P")
+    # the dialect passes only word-character identifiers to Spark, so
+    # this one is checked on the bound text
+    assert session._bind_params('SELECT "a?b$1", ? AS y', ["P"]) == (
+        "SELECT \"a?b$1\", 'P' AS y"
+    )
+
+
+def test_parameter_binding_too_few_values(session):
+    """A ? with no value left raises the same ValueError as an unbound
+    $n, not a bare StopIteration with an empty message."""
+    with pytest.raises(ValueError, match=r"no value bound for placeholder \? #2"):
+        session.execute("SELECT ? AS a, ? AS b", params=[1])
+    with pytest.raises(ValueError, match=r"no value bound for placeholder \$2"):
+        session.execute("SELECT $1 AS a, $2 AS b", params=[1])
+
+
 def test_parameter_binding_insert_roundtrip(dml_session):
     """Parameterized INSERT + bulk args (Session.bulkExec:717)."""
     dml_session.execute("CREATE TABLE pb (id int PRIMARY KEY, name text)")
